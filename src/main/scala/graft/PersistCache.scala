@@ -39,8 +39,13 @@ private[graft] object PersistCache {
     * optimization pass added 6 sites (the incremental-dedup family now
     * caches its candidate-bounded reused frames instead of letting
     * broadcast subtrees replay index scans — OPTIMIZATION_r21.md), taking
-    * sources to 18 = the old 75% line exactly; 32 restores the same ≥6
-    * sites of headroom (bound 24). Entry size class is unchanged —
+    * sources to 18 = the old 75% line exactly; 32 restores ≥6 sites of
+    * headroom (bound 24). r22's span-gram projection
+    * (Dedup.repeatedSpanCoverage) made 19. The incremental-dedup
+    * `fresh`/`losers` sites no longer register on a broadcast-path admit
+    * (it collects that decision to the driver instead), only on read-only
+    * calls and the shuffle fallback; the source count stays 19 against the
+    * bound of 24. Entry size class is unchanged —
     * candidate-/batch-bounded frames, the same class the broadcast bound
     * already admits per entry — so the memory argument above carries.
     */

@@ -48,11 +48,42 @@ object Dedup {
     * small-file field.
     */
   def buildExactIndex(df: DataFrame, keyCol: Column, indexPath: String): Unit =
-    df.select(md5(keyCol.cast("binary")).as("__h")).distinct()
-      .withColumn("__hp", substring(col("__h"), 1, 2))
-      .repartition(col("__hp"))
+    clusterOn(df.select(md5(keyCol.cast("binary")).as("__h")).distinct()
+        .withColumn("__hp", substring(col("__h"), 1, 2)), "__hp", HashPrefixes)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__hp").parquet(indexPath)
+
+  /** Prefix counts of the index layouts: the exact index's `__hp` is the
+    * first two hex digits of an md5 (256 values); the near-dup and
+    * containment `docs/` prefix is pmod(xxhash64(id), 32); the containment
+    * postings residue is pmod(ph, 64).
+    */
+  private val HashPrefixes = 256
+  private val IdPrefixes = 32
+  private val PostPrefixes = 64
+
+  /** Cluster rows on a prefix column before a partitioned write, into an
+    * explicit min(prefixes, defaultParallelism) partitions. Each prefix
+    * lands in exactly one task, so each write adds one file per prefix;
+    * the explicit count keeps AQE from coalescing a small write into one
+    * task that writes every prefix file in turn.
+    */
+  private def clusterOn(df: DataFrame, prefixCol: String,
+                        prefixes: Int): DataFrame =
+    df.repartition(
+      math.max(1, math.min(prefixes, df.sparkSession.sparkContext.defaultParallelism)),
+      col(prefixCol))
+
+  /** Run a batch-bounded frame once and re-plan its rows as a driver-local
+    * relation. An admit reads its decision back after the append; a frame
+    * whose lineage scans the index would be dropped from the cache by the
+    * append's `recacheByPath` and recomputed, and a local relation has no
+    * such lineage. Used only on the broadcast (`small`) path, where the
+    * same rows already pass through the driver as a broadcast.
+    */
+  private def onDriver(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*),
+      df.schema)
 
   // (indexPath, corpus memo identity) -> fingerprint header already
   // validated by this JVM — same guard discipline as
@@ -216,9 +247,13 @@ object Dedup {
     * the index first (the daily-ingest mode: re-running the same batch then
     * yields zero rows); `admit = false` is a pure read (the gate/oracle
     * mode, plan-memoized per snapshot — see [[memoReadOnly]]). The
-    * surviving-id set is bounded by batch size and is materialized BEFORE
-    * any append so the returned plan never observes the index rows this
-    * call added.
+    * returned plan never observes the index rows this call added: the
+    * index is read through a pinned snapshot. On the broadcast path the
+    * surviving-hash set (bounded by batch size) is also materialized once,
+    * BEFORE the append, as a driver-local relation, so neither the append
+    * nor the returned frame re-runs the index probe; the shuffle fallback
+    * persists it instead and recomputes it from the pinned snapshot after
+    * the append's recache drops it.
     */
   def exactIncremental(batch: DataFrame, keyCol: Column, idCol: Column,
                        indexPath: String, admit: Boolean = true,
@@ -288,31 +323,29 @@ object Dedup {
       else if (maxBroadcastHashes <= 0) false
       else bh.count() <= maxBroadcastHashes
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // pin the index SNAPSHOT by explicit file list: the survivor plan below
-    // stays deterministic even after this call's own append lands new files
-    // (a path-based read would be recomputed against the mutated index by
-    // Spark's recache-on-write, turning the admitted batch into 0 rows).
-    // The listing is one driver-side array of paths, same as any scan plans.
-    val preFiles =
-      try spark.read.parquet(indexPath).inputFiles.toIndexedSeq
-      catch {
-        // an index built from an EMPTY corpus has no parquet footers to
-        // infer a schema from — semantically it holds no hashes
-        case _: org.apache.spark.sql.AnalysisException => IndexedSeq.empty[String]
-      }
+    // pin the index SNAPSHOT by a driver-side file listing: the survivor
+    // plan below stays on the pre-append files even after this call's own
+    // append lands new ones (a path-based read would be recomputed against
+    // the mutated index once the append refreshes the plans over its path,
+    // turning the admitted batch into 0 rows). An index built from an EMPTY
+    // corpus, or not built yet, lists no files and holds no hashes.
+    val preFiles = IndexSnapshot.list(spark, indexPath)
     // pass over the index with the batch hashes joined into it (broadcast →
     // map-only; shuffle fallback → one index shuffle); hits are bounded by
     // batch size
     val hits =
       if (preFiles.isEmpty) bh.select(col("__h")).limit(0)
-      else spark.read.parquet(preFiles: _*).select(col("__h"))
+      else IndexSnapshot.read(spark, preFiles).select(col("__h"))
         .join(maybeB(bh.select(col("__h"))), Seq("__h"), "left_semi")
         .distinct()
     // fresh (≤ the batch's distinct hashes — the bh memory class) is read
-    // by the admit append AND the survivors broadcast: persist it so the
-    // survivors broadcast doesn't replay the index-probe anti-join
-    val fresh = graft.PersistCache.persist(
-      bh.join(maybeB(hits), Seq("__h"), "left_anti"))
+    // by the admit append AND the survivors broadcast, so it runs once:
+    // collected before the append on the broadcast path (see [[onDriver]]),
+    // persisted otherwise
+    val freshPlan = bh.join(maybeB(hits), Seq("__h"), "left_anti")
+    val fresh =
+      if (admit && small) onDriver(freshPlan)
+      else graft.PersistCache.persist(freshPlan)
     if (admit) {
       // Bump the append counter in `_index.txt` BEFORE the parquet append:
       // the counter is what stops a later corpus-keyed rebuild from
@@ -332,8 +365,8 @@ object Dedup {
       // stays pinned at the refusal.
       val bumped = IndexMeta.saturatedBump(appends)
       writeIndexMeta(metaPath, fpLine, bumped)
-      fresh.select(col("__h"), substring(col("__h"), 1, 2).as("__hp"))
-        .repartition(col("__hp")) // cluster: ~one appended file per prefix
+      clusterOn(fresh.select(col("__h"), substring(col("__h"), 1, 2).as("__hp")),
+          "__hp", HashPrefixes)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("__hp").parquet(indexPath)
       crashHook("dedup.appended")
@@ -346,9 +379,10 @@ object Dedup {
       .join(maybeB(survivors),
         col("__bh0") === col("__h") && idCol === col("__id"), "left_semi")
       .drop("__bh0")
-    // bh/fresh stay enrolled in the PersistCache FIFO: per-batch caches are
-    // evicted round-robin past the cap instead of growing session storage
-    // forever (the eviction contract this file's per-batch persists share).
+    // bh (and a persisted fresh) stay enrolled in the PersistCache FIFO:
+    // per-batch caches are evicted round-robin past the cap instead of
+    // growing session storage forever (the eviction contract this file's
+    // per-batch persists share).
     out
   }
 
@@ -386,8 +420,8 @@ object Dedup {
     // meta snapshot BEFORE the data rewrite (same pinning as the ANN twin)
     val (fpLine, appends) = readIndexMeta(
       java.nio.file.Paths.get(srcPath, "_index.txt")).getOrElse(("fp=?", 0L))
-    spark.read.parquet(srcPath)
-      .repartition(col("__hp"))
+    // HashPrefixes bounds both layouts' prefix counts (256 ≥ 32)
+    clusterOn(spark.read.parquet(srcPath), "__hp", HashPrefixes)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__hp").parquet(destPath)
     crashHook("dedup.compact-data")
@@ -501,9 +535,9 @@ object Dedup {
   def buildNearDupIndex(df: DataFrame, textCol: Column, idCol: Column,
                         indexPath: String, n: Int, numHashes: Int,
                         bands: Int): Unit =
-    nearDupSig(df, textCol, idCol, n, numHashes, bands)
-      .withColumn("__hp", pmod(xxhash64(col("id")), lit(32)).cast("int"))
-      .repartition(col("__hp"))
+    clusterOn(nearDupSig(df, textCol, idCol, n, numHashes, bands)
+        .withColumn("__hp", pmod(xxhash64(col("id")), lit(IdPrefixes)).cast("int")),
+        "__hp", IdPrefixes)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__hp").parquet(indexPath)
 
@@ -616,20 +650,16 @@ object Dedup {
       else if (maxBroadcastBandRows <= 0) false
       else prep.count() * bands <= maxBroadcastBandRows
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // pin the index SNAPSHOT by explicit file list (exactIncremental's
-    // recache-on-write defense: the survivor plan must not observe the
-    // rows this call's own admit appends)
-    val preFiles =
-      try spark.read.parquet(indexPath).inputFiles.toIndexedSeq
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => IndexedSeq.empty[String]
-      }
+    // pin the index SNAPSHOT by a driver-side file listing (as in
+    // exactIncremental: the survivor plan must not observe the rows this
+    // call's own admit appends)
+    val preFiles = IndexSnapshot.list(spark, indexPath)
     val bBand = prep.select(col("id").as("bid"),
       posexplode(col("bnd")).as(Seq("band", "bh")))
     val histDup =
       if (preFiles.isEmpty) prep.select(col("id")).limit(0)
       else {
-        val ix = spark.read.parquet(preFiles: _*)
+        val ix = IndexSnapshot.read(spark, preFiles)
         val iBand = ix.select(col("id").as("hid"),
           posexplode(col("bnd")).as(Seq("band", "bh")))
         // PERSIST the distinct candidate pairs (collision-bounded): the hid
@@ -680,10 +710,14 @@ object Dedup {
       .select(col("id_b").as("id"))
     // losers stays duplicate-bearing on purpose: every consumer is an
     // anti-join (duplicate keys are free there), so the distincts would
-    // only add shuffles. The set is candidate-bounded either way — and
-    // PERSISTED, so the admit-path survivors anti-join and the returned
-    // batch anti-join don't each replay the verification DAG.
-    val losers = graft.PersistCache.persist(histDup.unionByName(dominated))
+    // only add shuffles. The set is candidate-bounded either way, and it
+    // runs once for the admit-path survivors anti-join and the returned
+    // batch anti-join: collected before the append on the broadcast path
+    // (see [[onDriver]]), persisted otherwise.
+    val losersPlan = histDup.unionByName(dominated)
+    val losers =
+      if (admit && small) onDriver(losersPlan)
+      else graft.PersistCache.persist(losersPlan)
     val survivors = prep.join(losers, Seq("id"), "left_anti")
     if (admit) {
       // counter bump BEFORE the parquet append (see exactIncremental: the
@@ -692,9 +726,9 @@ object Dedup {
       val (fpLine, appends) = readIndexMeta(metaPath).getOrElse(("fp=?", 0L))
       val bumped = IndexMeta.saturatedBump(appends)
       writeIndexMeta(metaPath, fpLine, bumped)
-      survivors
-        .withColumn("__hp", pmod(xxhash64(col("id")), lit(32)).cast("int"))
-        .repartition(col("__hp"))
+      clusterOn(survivors
+          .withColumn("__hp", pmod(xxhash64(col("id")), lit(IdPrefixes)).cast("int")),
+          "__hp", IdPrefixes)
         .write.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("__hp").parquet(indexPath)
       crashHook("dedup.nd-appended")
@@ -728,8 +762,8 @@ object Dedup {
     * ~one file per touched prefix, so a year of daily batches leaves
     * hundreds of files per directory and scan open-costs dominate.
     *
-    *   1. measure max files per `__hp=` prefix (one driver-side listing —
-    *      the same bounded metadata walk every scan plans with);
+    *   1. measure max files per `__hp=` prefix (one driver-side listing,
+    *      [[IndexSnapshot.list]] — no Spark job);
     *   2. at or under `maxFilesPerPrefix` → no action;
     *   3. over → stop the attached [[graft.streaming.DedupIndexStream]] /
     *      [[graft.streaming.NearDupIndexStream]] (single-writer: the
@@ -752,20 +786,18 @@ object Dedup {
     // worst prefix across BOTH, and its compactor rebuilds both from docs/
     val isContainment =
       java.nio.file.Files.isDirectory(java.nio.file.Paths.get(indexPath, "docs"))
-    def filesOf(p: String): Array[String] =
-      try spark.read.parquet(p).inputFiles
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => Array.empty[String]
-      }
     val files =
-      if (isContainment) filesOf(s"$indexPath/docs") ++ filesOf(s"$indexPath/post")
-      else filesOf(indexPath)
+      if (isContainment) IndexSnapshot.list(spark, s"$indexPath/docs") ++
+        IndexSnapshot.list(spark, s"$indexPath/post")
+      else IndexSnapshot.list(spark, indexPath)
     val worst =
       if (files.isEmpty) 0
       // key = parent dir qualified by its table dir, so docs/__hp=3 and
       // post/__pp=3 count separately (and flat layouts keep their prefix)
-      else files.groupBy(f => f.split("/").dropRight(1).takeRight(2).mkString("/"))
-        .values.map(_.length).max
+      else files.groupBy { f =>
+        val dir = f.getPath.getParent
+        s"${dir.getParent.getName}/${dir.getName}"
+      }.values.map(_.length).max
     if (worst <= maxFilesPerPrefix)
       return MaintainDedupResult(worst, compacted = false, indexPath, stream)
     // quiesce the single writer BEFORE the compactor reads its snapshot
@@ -934,21 +966,33 @@ object Dedup {
                             numProbes: Int = 16): Unit = {
     val sig = graft.PersistCache.persist(
       containmentSig(df, textCol, idCol, n, numProbes))
-    sig.select(explode(col("hs")).as("ph"), col("id").as("hid"))
-      .withColumn("__pp", pmod(col("ph"), lit(64)).cast("int"))
-      .repartition(col("__pp"))
-      // ph-sorted within each partition file: parquet row-group min/max
-      // stats become tight ph ranges, so a probe-derived pushed predicate
-      // can SKIP row groups instead of scanning the whole per-token table
-      // (see containmentIncremental's probe-scan bounding)
-      .sortWithinPartitions(col("__pp"), col("ph"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__pp").parquet(s"$indexPath/post")
-    sig.withColumn("__hp", pmod(xxhash64(col("id")), lit(32)).cast("int"))
-      .repartition(col("__hp"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__hp").parquet(s"$indexPath/docs")
+    writePostings(sig, s"$indexPath/post", org.apache.spark.sql.SaveMode.Overwrite)
+    writeDocs(sig, s"$indexPath/docs", org.apache.spark.sql.SaveMode.Overwrite)
   }
+
+  /** The containment postings write: (ph, hid) per signature hash,
+    * clustered on the `__pp` residue and ph-sorted within each partition
+    * file, so parquet row-group min/max stats become tight ph ranges and a
+    * probe-derived pushed predicate can SKIP row groups instead of scanning
+    * the whole per-token table (see containmentIncremental's probe-scan
+    * bounding).
+    */
+  private def writePostings(sig: DataFrame, path: String,
+                            mode: org.apache.spark.sql.SaveMode): Unit =
+    clusterOn(sig.select(explode(col("hs")).as("ph"), col("id").as("hid"))
+        .withColumn("__pp", pmod(col("ph"), lit(PostPrefixes)).cast("int")),
+        "__pp", PostPrefixes)
+      .sortWithinPartitions(col("__pp"), col("ph"))
+      .write.mode(mode)
+      .partitionBy("__pp").parquet(path)
+
+  /** The containment doc-row write, clustered on the id-hash prefix. */
+  private def writeDocs(sig: DataFrame, path: String,
+                        mode: org.apache.spark.sql.SaveMode): Unit =
+    clusterOn(sig.withColumn("__hp",
+        pmod(xxhash64(col("id")), lit(IdPrefixes)).cast("int")), "__hp", IdPrefixes)
+      .write.mode(mode)
+      .partitionBy("__hp").parquet(path)
 
   private val containmentIndexValidated =
     new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), String]()
@@ -1048,13 +1092,8 @@ object Dedup {
       }
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // pin BOTH table snapshots before any append
-    def filesOf(p: String): IndexedSeq[String] =
-      try spark.read.parquet(p).inputFiles.toIndexedSeq
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => IndexedSeq.empty[String]
-      }
-    val postFiles = filesOf(s"$indexPath/post")
-    val docFiles = filesOf(s"$indexPath/docs")
+    val postFiles = IndexSnapshot.list(spark, s"$indexPath/post")
+    val docFiles = IndexSnapshot.list(spark, s"$indexPath/docs")
     val bHashes = prep.select(col("id").as("bid"), explode(col("hs")).as("ph"))
     val bProbes = prep.select(col("id").as("bid"), explode(col("pr")).as("ph"))
     // Probe-scan bounding: the postings table is the one per-TOKEN-width
@@ -1080,7 +1119,7 @@ object Dedup {
     val histDup =
       if (docFiles.isEmpty) prep.select(col("id")).limit(0)
       else {
-        val docsIx = spark.read.parquet(docFiles: _*)
+        val docsIx = IndexSnapshot.read(spark, docFiles)
         // side 2: stored history probes into the batch's hash inventory
         // (history quoted by batch)
         val iProbes = docsIx.select(col("id").as("hid"),
@@ -1093,15 +1132,15 @@ object Dedup {
         // bounded: residue-pruned file list + pushed ph ranges (above).
         val scanFiles = probeVals match {
           case Some(vs) =>
-            val residues = vs.map(v => ((v % 64) + 64) % 64).toSet
-            postFiles.filter(f =>
-              residues.exists(r => f.contains(s"/__pp=$r/")))
+            val residues =
+              vs.map(v => s"__pp=${java.lang.Math.floorMod(v, PostPrefixes.toLong)}").toSet
+            postFiles.filter(f => residues.contains(f.getPath.getParent.getName))
           case None => postFiles
         }
         val cand1 =
           if (scanFiles.isEmpty) cand2.limit(0)
           else {
-            val scan0 = spark.read.parquet(scanFiles: _*)
+            val scan0 = IndexSnapshot.read(spark, scanFiles)
             // the pushed predicate pays off only when there are enough
             // files/row-groups to skip (ProbeFilterMinFiles) — on a small
             // index its plan overhead exceeds the whole scan
@@ -1159,10 +1198,15 @@ object Dedup {
         interIB / least(size(col("sha")), size(col("shb"))).cast("double"))
       .filter(col("__c") >= threshold)
       .select(col("id_b").as("id"))
-    // candidate-bounded loser ids, PERSISTED: consumed by the survivors
-    // anti-join (admit path) and the returned batch anti-join — without the
-    // cache each consumer replays the whole verification DAG above
-    val losers = graft.PersistCache.persist(histDup.unionByName(dominated))
+    // candidate-bounded loser ids, consumed by the survivors anti-join
+    // (read by BOTH appends on the admit path) and the returned batch
+    // anti-join: run once — collected before the appends on the broadcast
+    // path (see [[onDriver]]), persisted otherwise — so no consumer replays
+    // the verification DAG above
+    val losersPlan = histDup.unionByName(dominated)
+    val losers =
+      if (admit && small) onDriver(losersPlan)
+      else graft.PersistCache.persist(losersPlan)
     val survivors = prep.join(losers, Seq("id"), "left_anti")
     if (admit) {
       val metaPath = java.nio.file.Paths.get(indexPath, "_index.txt")
@@ -1170,18 +1214,9 @@ object Dedup {
       val bumped = IndexMeta.saturatedBump(appends)
       writeIndexMeta(metaPath, fpLine, bumped)
       // POSTINGS FIRST (see the crash-ordering note)
-      survivors.select(explode(col("hs")).as("ph"), col("id").as("hid"))
-        .withColumn("__pp", pmod(col("ph"), lit(64)).cast("int"))
-        .repartition(col("__pp"))
-        .sortWithinPartitions(col("__pp"), col("ph")) // tight row-group stats
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("__pp").parquet(s"$indexPath/post")
+      writePostings(survivors, s"$indexPath/post", org.apache.spark.sql.SaveMode.Append)
       crashHook("dedup.cn-post")
-      survivors
-        .withColumn("__hp", pmod(xxhash64(col("id")), lit(32)).cast("int"))
-        .repartition(col("__hp"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
-        .partitionBy("__hp").parquet(s"$indexPath/docs")
+      writeDocs(survivors, s"$indexPath/docs", org.apache.spark.sql.SaveMode.Append)
       crashHook("dedup.cn-docs")
     }
     batch.join(maybeB(losers.select(col("id").as("__lid"))),
@@ -1200,16 +1235,8 @@ object Dedup {
     val docs = graft.PersistCache.persist(
       spark.read.parquet(s"$srcPath/docs")
         .select(col("id"), col("hs"), col("pr")).dropDuplicates("id"))
-    docs.select(explode(col("hs")).as("ph"), col("id").as("hid"))
-      .withColumn("__pp", pmod(col("ph"), lit(64)).cast("int"))
-      .repartition(col("__pp"))
-      .sortWithinPartitions(col("__pp"), col("ph")) // tight row-group stats
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__pp").parquet(s"$destPath/post")
-    docs.withColumn("__hp", pmod(xxhash64(col("id")), lit(32)).cast("int"))
-      .repartition(col("__hp"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("__hp").parquet(s"$destPath/docs")
+    writePostings(docs, s"$destPath/post", org.apache.spark.sql.SaveMode.Overwrite)
+    writeDocs(docs, s"$destPath/docs", org.apache.spark.sql.SaveMode.Overwrite)
     crashHook("dedup.compact-data")
     writeIndexMeta(java.nio.file.Paths.get(destPath, "_index.txt"),
       fpLine, appends)
@@ -1342,13 +1369,17 @@ object Dedup {
     // every pass but the first operate on a lightweight proxy" shape. This
     // is a corpus-token-bounded entry (not candidate-bounded like the
     // incremental-dedup caches): MEMORY_AND_DISK spills it, and eviction
-    // falls back to lineage recompute as everywhere else.
-    val g = graft.PersistCache.persist(
+    // falls back to lineage recompute as everywhere else. Tagged with the
+    // input's file-listing signature (persistTagged): untagged, a rerun
+    // over a landing dir that has since gained files was served the cached
+    // grams of the old listing (SnapshotSpec pins this).
+    val g = graft.PersistCache.persistTagged(
       df.select(idCol.as("doc_id"),
           posexplode(graft.functions.NGramMd5(textCol, n))
             .as(Seq("start", "gh")))
         .select(col("doc_id"), col("start"),
-          col("gh.h1").as("h1"), col("gh.h2").as("h2")))
+          col("gh.h1").as("h1"), col("gh.h2").as("h2")),
+      Similarity.inputSnapshotSig(df))
     val dup = g.groupBy(col("h1"), col("h2")).agg(count(lit(1)).as("__c"))
       .filter(col("__c") >= minCount).select(col("h1"), col("h2"))
     val cov = g.join(dup, Seq("h1", "h2"))

@@ -3854,4 +3854,152 @@ class PipelineSpec extends AnyFunSuite {
       s"$sites PersistCache registering sites exceed 75% of the cap " +
         s"(${graft.PersistCache.maxEntries}); bump maxEntries or drop a site")
   }
+
+  // ---- incremental admits pay for the batch, not the index --------------
+
+  /** 30-token docs over a 600-word vocabulary: distinct texts share few
+    * trigrams, and appending one word keeps a copy's trigram Jaccard at
+    * 28/29 and its containment at 1.
+    */
+  private def admitDocs(seed: Long, ids: Range): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    ids.map(i => (i.toLong, Seq.fill(30)(s"w${rnd.nextInt(600)}").mkString(" ")))
+  }
+
+  /** A batch against `hist`: exact copies, near copies, an intra-batch
+    * duplicate pair and fresh docs, with ids from `from`.
+    */
+  private def admitBatch(hist: Seq[(Long, String)], from: Long,
+                         seed: Long): Seq[(Long, String)] = {
+    val fresh = admitDocs(seed, 0 until 20).map { case (i, t) => (from + i, t) }
+    fresh ++ Seq(
+      (from + 100, hist(3)._2), (from + 101, hist(7)._2 + " dup"),
+      (from + 102, fresh(0)._2), (from + 103, hist(11)._2 + " extra"))
+  }
+
+  private val admitOps: Seq[(String, (DataFrame, String, Long) => DataFrame,
+                            (DataFrame, String) => Unit)] = Seq(
+    ("exact",
+      (b, idx, bound) => Dedup.exactIncremental(b, col("text"), col("doc_id"), idx,
+        maxBroadcastHashes = bound),
+      (c, idx) => Dedup.buildExactIndexIfMissing(c, col("text"), col("doc_id"), idx)),
+    ("near-dup",
+      (b, idx, bound) => Dedup.nearDupIncremental(b, col("text"), col("doc_id"), idx,
+        n = 3, numHashes = 64, bands = 32, threshold = 0.9, maxBroadcastBandRows = bound),
+      (c, idx) => Dedup.buildNearDupIndexIfMissing(c, col("text"), col("doc_id"), idx,
+        n = 3, numHashes = 64, bands = 32)),
+    ("containment",
+      (b, idx, bound) => Dedup.containmentIncremental(b, col("text"), col("doc_id"), idx,
+        n = 3, threshold = 0.95, numProbes = 16, maxBroadcastRows = bound),
+      (c, idx) => Dedup.buildContainmentIndexIfMissing(c, col("text"), col("doc_id"), idx,
+        n = 3, numProbes = 16)))
+
+  private def ids(df: DataFrame): Set[Long] =
+    df.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+
+  /** Index data files by parent dir (`docs/__hp=3`, `__hp=3f`, …). */
+  private def filesByPrefix(idx: String): Map[String, Set[String]] = {
+    import scala.jdk.CollectionConverters._
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
+    try s.iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .toSeq.groupBy(p => idx + "/" + java.nio.file.Paths.get(idx)
+        .relativize(p.getParent).toString)
+      .map { case (d, ps) => d -> ps.map(_.toString).toSet }
+    finally s.close()
+  }
+
+  test("incremental admits launch no listing or schema-inference job over a many-prefix index") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("admit-jobs").toString
+    val hist = admitDocs(71L, 0 until 400)
+    val corpus = hist.toDF("doc_id", "text")
+    val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
+    for (((name, admit, build), k) <- admitOps.zipWithIndex) {
+      val idx = s"$base/$k"
+      build(corpus, idx)
+      // a first admit adds one file per touched prefix, so the second runs
+      // over more than 32 prefix dirs (exact: up to 256; containment: 64
+      // postings dirs) or, for near-dup's 32 dirs, more than 32 files
+      ids(admit(admitBatch(hist, 1000L, 5L).toDF("doc_id", "text"), idx, 4000000L))
+      assert(filesByPrefix(idx).size > 32 || filesByPrefix(idx).values.map(_.size).sum > 32,
+        s"$name: the index must exceed the parallel-listing threshold")
+      val batch = admitBatch(hist, 2000L, 6L).toDF("doc_id", "text")
+      // (description, SQL execution id, stage names) per job
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val p = Option(j.properties)
+          def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).getOrElse("")
+          jobs.add((prop("spark.job.description"), prop("spark.sql.execution.id"),
+            j.stageInfos.map(_.name).mkString(";")))
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        ids(admit(batch, idx, 4000000L))
+        // listener delivery is async: wait until the count is stable
+        var last = -1
+        var stable = 0
+        while (stable < 3) {
+          Thread.sleep(150)
+          val now = jobs.size
+          if (now == last) stable += 1 else { stable = 0; last = now }
+        }
+      } finally spark.sparkContext.removeSparkListener(listener)
+      import scala.jdk.CollectionConverters._
+      val all = jobs.asScala.toSeq
+      val listing = all.filter(_._1.startsWith("Listing leaf files"))
+      // schema inference runs outside any SQL execution, from the reader
+      // (call site `parquet at …`), and carries no description
+      val inference = all.filter(j => j._1.isEmpty && j._2.isEmpty &&
+        j._3.startsWith("parquet at"))
+      if (listing.nonEmpty || inference.nonEmpty)
+        offenders += s"$name launched ${listing.size} listing and " +
+          s"${inference.size} schema-inference jobs: ${(listing ++ inference).map(_._3)}"
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("incremental admits: index-free returned frame, one file per touched prefix, fallback agrees") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("admit-out").toString
+    val hist = admitDocs(72L, 0 until 300)
+    val corpus = hist.toDF("doc_id", "text")
+    val batch = admitBatch(hist, 1000L, 8L).toDF("doc_id", "text")
+    for (((name, admit, build), k) <- admitOps.zipWithIndex) {
+      val idx = s"$base/small$k"
+      build(corpus, idx)
+      val before = filesByPrefix(idx)
+      val out = admit(batch, idx, 4000000L)
+      val idxUri = new java.io.File(idx).toURI.getPath
+      val scansIndex = out.queryExecution.analyzed.exists {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          lr.relation match {
+            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+              fs.location.rootPaths.exists(_.toUri.getPath.startsWith(idxUri))
+            case _ => false
+          }
+        case _ => false
+      }
+      assert(!scansIndex, s"$name: the returned frame still holds a relation under the index")
+      val first = ids(out)
+      assert(first === ids(out), s"$name: the returned frame must be stable after the append")
+      // copies of history and the intra-batch duplicate drop, fresh docs stay
+      assert(!first.contains(1100L) && !first.contains(1102L) && first.contains(1000L),
+        s"$name: $first")
+      if (name != "exact") assert(!first.contains(1101L) && !first.contains(1103L), name)
+      val after = filesByPrefix(idx)
+      val added = after.map { case (d, fs) => d -> (fs -- before.getOrElse(d, Set.empty)).size }
+        .filter(_._2 > 0)
+      assert(added.nonEmpty, s"$name admitted nothing")
+      assert(added.values.forall(_ == 1),
+        s"$name wrote more than one file into a prefix: ${added.filter(_._2 > 1)}")
+      // the forced shuffle fallback decides the same on a twin index
+      val twin = s"$base/shuffle$k"
+      build(corpus, twin)
+      assert(ids(admit(batch, twin, 0L)) === first,
+        s"$name: the shuffle fallback must return the small path's survivors")
+    }
+  }
 }

@@ -186,4 +186,22 @@ class SnapshotSpec extends AnyFunSuite {
       .map(_.getLong(0)).toSet
     assert(ids.contains(50L), "the appended row must be in the index")
   }
+
+  test("repeatedSpanStats: a grown corpus dir is counted, not served cached grams") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("snap-span").toString
+    val cdir = base + "/corpus"
+    Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
+      .toDF("doc_id", "text").write.parquet(cdir)
+    def stats(): Map[Long, Long] =
+      Dedup.repeatedSpanStats(spark.read.parquet(cdir), col("text"),
+          col("doc_id"), n = 3)
+        .select("doc_id", "dup_pos").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(stats() === Map(1L -> 0L, 2L -> 0L))
+    // doc 3 repeats doc 1 verbatim: both are now fully covered by repeats
+    growExternally(cdir, Seq((3L, "alpha beta gamma delta")).toDF("doc_id", "text"))
+    assert(stats() === Map(1L -> 4L, 2L -> 0L, 3L -> 4L),
+      "the rerun must count the grams of the grown listing, not the cached old ones")
+  }
 }
