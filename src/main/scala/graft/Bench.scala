@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line. Queries execute to a noop
   * sink so column pruning can't skip the projected work the way `count()`
@@ -10,31 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER=local-cluster[4,8,4096] runs the identical suite
-    // against REAL separate executor JVMs (real serialization, real
-    // broadcasts, real shuffle transport) — the multi-process validation
-    // local[n] can't give. SPARK_GRAFT_JARS must then point at the packaged
-    // application jar (sbt package) so executors can load graft classes.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE right-size CACHED plan output partitions by advisory bytes
-      // (default false keeps a persisted frame at spark.sql.shuffle.
-      // partitions): every PersistCache scan-saver is a candidate-/vocab-
-      // bounded frame, so without this each of its consumers paid one task
-      // per configured shuffle partition regardless of size — measured 103
-      // tasks -> 10 and −40% wall on the tf-idf gate (OPTIMIZATION_r21.md).
-      // Bytes-based, so the setting is scale-adaptive, not local-tuned.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv()
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** zeno-cli parity (/root/reference/cmd/zeno-cli): a minimal REPL over a
   * schema + data dir. `runMain graft.Cli <schema.yaml> <dataDir>` then type
   * dialect SQL, one statement per line; `\q` exits; `\stats` toggles
@@ -34,17 +32,7 @@ object Cli {
     if (args.headOption.contains("--connect")) { remote(args.drop(1), porcelain); return }
     require(args.length >= 2,
       "usage: Cli <schema.yaml> <dataDir> [--porcelain] [sql...] | Cli --connect host:port [--porcelain] [sql...]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      // AQE may right-size cached-plan output partitions (see Bench)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv()
     val schemaText = java.nio.file.Files.readString(java.nio.file.Paths.get(args(0)))
     val db = new GraftDB(spark, schemaText, args(1))
 

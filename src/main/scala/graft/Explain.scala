@@ -1,27 +1,52 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
+import scala.util.control.NonFatal
 
-/** Plan-inspection util: `runMain graft.Explain <query> [sfDir]` prints the
-  * formatted physical plan — the loop for checking PushedFilters/ReadSchema,
-  * broadcast choices, and WholeStageCodegen spans before shipping a query.
+/** Plan-inspection util: prints the formatted physical plan of gate queries
+  * — the loop for checking PushedFilters/ReadSchema, broadcast choices, and
+  * WholeStageCodegen spans before shipping a query.
+  *
+  *   runMain graft.Explain <sfDir> [--out <dir>] [query...]
+  *
+  * No query names every gate. Plans go to stdout, or with `--out` to one
+  * `<dir>/<query>.txt` per query — the plans/rNN/ evidence optimization
+  * rounds commit. All plans come from one session.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE may right-size cached-plan output partitions (see Bench)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+    require(args.nonEmpty, "usage: Explain <sfDir> [--out <dir>] [query...]")
+    val sfDir = args(0)
+    var outDir: Option[String] = None
+    val named = Seq.newBuilder[String]
+    val it = args.iterator.drop(1)
+    while (it.hasNext) it.next() match {
+      case "--out" => outDir = Some(it.next())
+      case n => named += n
+    }
+    val names = named.result() match {
+      case Seq() => SparkEntry.queries.keys.toSeq.sorted
+      case ns => ns
+    }
+    val spark = Sessions.fromEnv()
+    outDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    names.foreach { n =>
+      try {
+        val plan = SparkEntry.queries(n)(spark, sfDir)
+          .queryExecution.explainString(FormattedMode)
+        outDir match {
+          case Some(d) =>
+            Files.writeString(Paths.get(d, s"$n.txt"), plan)
+            println(s"[explain] $n ok")
+          case None =>
+            if (names.size > 1) println(s"== $n ==")
+            println(plan)
+        }
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[explain] $n failed: ${e.getMessage}")
+      }
+    }
     spark.stop()
   }
 }

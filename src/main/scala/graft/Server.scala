@@ -138,17 +138,7 @@ object Server {
     require(args.length >= 2,
       "usage: Server <schema.yaml> <dataDir> [httpPort] [rpcPort] " +
         "[aliases.props] [--vtime] [--maintain-interval <seconds>]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      // AQE may right-size cached-plan output partitions (see Bench)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.fromEnv()
     args.lift(4).foreach(p => sqlx.Parser.registerAliasesProps(
       java.nio.file.Files.readString(java.nio.file.Paths.get(p))))
     val r = start(spark, args(0), args(1),

@@ -222,14 +222,15 @@ object SparkEntry {
     * folded to a constant-checkable row: the oracle pins `(n_queries,
     * recall_ok)`, so a recall collapse at realistic probe depths flips the
     * boolean and FAILS the gate — the quality signal the rows-only `_fast`
-    * twins lacked. Floor calibration (tools.RecallProbe, every fixture
-    * scale): the synthetic embeddings are near-UNIFORM — the worst case
-    * for cell pruning, where recall ≈ the fraction of the corpus probed —
-    * so correct nProbe-4-of-16 probing measures 0.55–0.65 (IVF) and
-    * 0.37–0.67 (IVF-PQ with refineK 50) while BROKEN probing (wrong
-    * cells) collapses to ≈0.25 and a broken ADC to ≈0. The floors sit
-    * between the two regimes; production clustered corpora sit far above
-    * both.
+    * twins lacked. Floor calibration (every fixture scale; BENCH_LOCAL.md
+    * "Round-14: pruned-ANN recall floors", measured by the retired
+    * RecallProbe tool at git 6fef9ce): the synthetic embeddings are
+    * near-UNIFORM — the worst case for cell pruning, where recall ≈ the
+    * fraction of the corpus probed — so correct nProbe-4-of-16 probing
+    * measures 0.55–0.65 (IVF) and 0.37–0.67 (IVF-PQ with refineK 50)
+    * while BROKEN probing (wrong cells) collapses to ≈0.25 and a broken
+    * ADC to ≈0. The floors sit between the two regimes; production
+    * clustered corpora sit far above both.
     */
   private[graft] def recallRow(fast: DataFrame, truth: DataFrame,
                                floor: Double): DataFrame =
@@ -1264,9 +1265,10 @@ object SparkEntry {
     // realistic-probe-depth twin of q_ann_filtered_batch: filters ×
     // pruning COMPOUND recall loss (a selective predicate empties probed
     // cells), so the filtered fast path carries its own recall gate
-    // against the exact FILTERED truth. Floor calibrated with
-    // tools.RecallProbe on the near-uniform fixture: measured 0.43 /
-    // 0.62 / 0.55 at sf0.001/0.01/0.1 (tracking the unfiltered
+    // against the exact FILTERED truth. Floor calibrated on the
+    // near-uniform fixture (NOTES_r15.md item 7; the retired RecallProbe
+    // tool at git 6fef9ce): measured 0.43 / 0.62 / 0.55 at
+    // sf0.001/0.01/0.1 (tracking the unfiltered
     // fraction-probed because the labels are direction-independent),
     // while broken filtered probing collapses toward ~0.2 — 0.35 sits
     // between the regimes with margin on both sides.

@@ -33,9 +33,10 @@ final class CentroidMat(val ids: Array[Int], val flat: Array[Double],
   * reference object: a reference object serializes into the task binary,
   * which every task deserializes independently — measured at 10^4
   * centroids × dim 1024 (an 81 MB matrix) that fixed cost was ~15 s/job
-  * (tools/CentroidStress), swamping the actual argmin. The broadcast
-  * ships once per executor via torrent blocks and is cached across jobs —
-  * exactly what Lloyd iterations and repeated probes want.
+  * (BENCH_LOCAL.md "Centroid-scale ceiling removed"; the retired
+  * CentroidStress tool, at git 6fef9ce), swamping the actual argmin. The
+  * broadcast ships once per executor via torrent blocks and is cached
+  * across jobs — exactly what Lloyd iterations and repeated probes want.
   *
   * Ranking arithmetic: argmin of cosine distance = argmax of
   * dot(v, c)·(1/|c|) — |v| is constant across candidates, so neither |v|

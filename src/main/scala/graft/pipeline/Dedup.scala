@@ -877,9 +877,7 @@ object Dedup {
     * shuffle fallback — at that probe density row-group skipping cannot
     * win anyway (every row group contains some probe).
     */
-  private[graft] def ProbeFilterMaxProbes: Int =
-    sys.props.get("graft.containmentProbeFilterMax").map(_.toInt)
-      .getOrElse(4096)
+  private[graft] val ProbeFilterMaxProbes: Int = 4096
 
   /** Cap on pushed OR-of-range terms — bounds both the parquet row-group
     * stats evaluation and the residual per-row filter cost.
@@ -1105,9 +1103,11 @@ object Dedup {
     // pushed OR-of-ranges predicate on `ph`, which skips row groups via
     // the ph-sorted writes' tight min/max stats. Bytes read then scale
     // with the BATCH's probe count, not the corpus (superlinearly so as
-    // batches shrink — ContainmentStress measures it). Giant batches whose
-    // probes saturate the hash space skip the filter: for them row-group
-    // skipping cannot win and the shuffle fallback is the scale path.
+    // batches shrink — BENCH_LOCAL.md "Round-16: containment postings
+    // probe-scan bounding", measured by the retired ContainmentStress tool
+    // at git 6fef9ce). Giant batches whose probes saturate the hash space
+    // skip the filter: for them row-group skipping cannot win and the
+    // shuffle fallback is the scale path.
     val probeVals: Option[Array[Long]] =
       if (!small || postFiles.isEmpty) None
       else {

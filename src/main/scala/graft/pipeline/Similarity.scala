@@ -398,9 +398,10 @@ object Similarity {
     * Rows CLUSTER on the cell before the write (one shuffle): a dynamic-
     * partition write otherwise sprays every cell across every task —
     * (tasks × cells) tiny files, measured 0.6–0.8× of a full REBUILD per
-    * append on tools.AnnAppendStress before the fix — where clustering
-    * bounds it at one file per cell per write (the buildExactIndex
-    * discipline).
+    * append before the fix (BENCH_LOCAL.md "Round-14: incremental ANN
+    * maintenance"; the retired AnnAppendStress tool, at git 6fef9ce) —
+    * where clustering bounds it at one file per cell per write (the
+    * buildExactIndex discipline).
     */
   def ivfBuild(df: DataFrame, vecCol: Column, idCol: Column, nCentroids: Int,
                indexPath: String, refineIters: Int = 2): Seq[(Int, Seq[Float])] = {
@@ -915,9 +916,10 @@ object Similarity {
     * monitor for incrementally-appended indexes: appends against frozen
     * centroids can only grow cells, and a drifted ingest crowds few of
     * them until "pruned" probes read most of the corpus
-    * (tools.AnnDriftStress measured the probed fraction climbing
-    * 0.30 → 0.64 as a shared ingest shift passed the inter-cluster
-    * scale, while recall stayed ≥ 0.99 — the degradation is COST, not
+    * (the retired AnnDriftStress tool, at git 6fef9ce, measured the
+    * probed fraction climbing 0.30 → 0.64 as a shared ingest shift passed
+    * the inter-cluster scale, while recall stayed ≥ 0.99; BENCH_LOCAL.md
+    * "Round-14: frozen-centroid drift" — the degradation is COST, not
     * quality, so a recall floor would never fire). One column-pruned
     * aggregate over the partition column; returns (cell, rows, share)
     * ordered by share descending. Re-cluster blue/green when
@@ -934,7 +936,8 @@ object Similarity {
       .orderBy(col("share").desc, col("cell"))
   }
 
-  /** The probed-fraction-at-nProbe statistic tools.AnnDriftStress
+  /** The probed-fraction-at-nProbe statistic the drift measurements
+    * (BENCH_LOCAL.md "Round-14: frozen-centroid drift")
     * validated as THE re-cluster trigger: the worst-case fraction of index
     * rows an nProbe probe reads = the sum of the top-nProbe cell shares.
     * Frozen-centroid drift does not hurt recall (measured ≥ 0.99 out to 5×
@@ -959,7 +962,8 @@ object Similarity {
       stream: Option[org.apache.spark.sql.streaming.StreamingQuery])
 
   /** Operational glue for the incremental-IVF lifecycle — the re-cluster
-    * policy tools.AnnDriftStress measured, as one entry point:
+    * policy BENCH_LOCAL.md "Round-14: frozen-centroid drift" measured, as
+    * one entry point:
     *
     *   1. compute [[probedFraction]] at the caller's `nProbe`;
     *   2. under `scanBudget` → no action (appends against frozen centroids

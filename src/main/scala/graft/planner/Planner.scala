@@ -597,7 +597,8 @@ final class Planner(catalog: Catalog, now: () => Long = () => System.currentTime
         // one extra scan of the crosstab dim ALONE — on columnar storage
         // that column-pruned distinct reads a sliver of the bytes, which
         // measures CHEAPER at every tested scale than persisting a pre-agg
-        // (tools/CrosstabStress at 60M rows: persist shape 1.39× slower —
+        // (60M rows: persist shape 1.78× slower, BENCH_LOCAL.md "CROSSTAB
+        // shape split", measured by CrosstabStress, retired, at git 6fef9ce —
         // caching breaks whole-stage pipelining and buys nothing a pruned
         // scan doesn't). Spark names pivot outputs "<val>_<aggAlias>" for
         // multi-agg, "<val>" for single-agg.
@@ -658,7 +659,7 @@ final class Planner(catalog: Catalog, now: () => Long = () => System.currentTime
       // pivot the FINAL field values. (keys, __ct) is unique post-agg, so
       // first() is exact. Pivot values come from a column-pruned distinct
       // over the SOURCE — the same trade the no-shift path measured
-      // (CrosstabStress: the persist shape is 1.39× slower at 60M rows;
+      // ("CROSSTAB shape split", BENCH_LOCAL.md: persist 1.78× at 60M rows;
       // a pruned scan reads one dim's bytes). The __ct domain is identical
       // on both frames: aggregation preserves every non-null group key, and
       // the shift span clamp only drops buckets outside a series' own

@@ -770,10 +770,11 @@ final class MaterializedTable(
     * and a bucketed read opens one relation PER generation
     * (openDays: several `__day=` roots can't share one discovery pass), so
     * a wide-window query over a grown store is back to the O(days)-relations
-    * plan the per-generation read exists to prevent. The judge's 100×
-    * QueryStress store never showed this because it was built in ONE merge
-    * (one generation); a store built by 3,001 daily flushes would have hit
-    * it in production.
+    * plan the per-generation read exists to prevent. The 100× store of
+    * BENCH_LOCAL.md "Stored-table query scaling (round 10)" never showed
+    * this because it was built in ONE merge (one generation); a store built
+    * by 3,001 daily flushes would have hit it in production ("Generation
+    * fragmentation + compaction (round 11)"; both tools at git 6fef9ce).
     *
     * Policy (size-tiered, LSM-style): when live generations exceed
     * `graft.compact.maxGenerations` (default 32), rewrite the days of every

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Measurement harness for the optimization loop (guide §1): runs named
   * gate queries with a SparkListener attached and reports, per run,
@@ -69,20 +68,7 @@ object JobProfile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE may right-size cached-plan output partitions (see Bench);
-      // -Dgraft.profile.cachedPlanFlag=false A/Bs the flag (r21 VERDICT
-      // item 3: q_percentile / q_vocab_topk reproduce-or-close)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.props.getOrElse("graft.profile.cachedPlanFlag", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.fromEnv()
     val acc = new Acc
     spark.sparkContext.addSparkListener(acc)
 

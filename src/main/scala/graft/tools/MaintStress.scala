@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Maintenance-cost profile for the dedup index family across corpus
@@ -29,24 +28,15 @@ import org.apache.spark.sql.functions._
   * not verification skew.
   *
   * Run: sbt "runMain graft.tools.MaintStress [corpusSizes...]"
-  *      (default 20000 80000 320000; env SPARK_GRAFT_MASTER/JARS/CPUS as
-  *      the other stress tools)
+  *      (default 20000 80000 320000; session settings from the
+  *      environment, see [[graft.Sessions]])
   */
 object MaintStress {
   def main(args: Array[String]): Unit = {
     val sizes =
       if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(20000L, 80000L, 320000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_JARS").foreach(j => builder.config("spark.jars", j))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.fromEnv()
 
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)

@@ -1,19 +1,12 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Drives the zeno-cli-equivalent surface in one-shot mode. */
-class CliSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CliSpec extends AnyFunSuite with TestSession {
 
   test("one-shot CLI runs a dialect statement over a populated store") {
     val dir = Files.createTempDirectory("graft-cli").toString

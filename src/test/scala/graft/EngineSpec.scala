@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Similarity
@@ -9,16 +9,9 @@ import graft.pipeline.Similarity
   * (/root/reference/README.md:78-395, FIXTURES.md §1): 8 points on stream
   * `inbound`, queried with the README's golden queries.
   */
-class EngineSpec extends AnyFunSuite {
+class EngineSpec extends AnyFunSuite with TestSession {
 
   private val EPS = 1e-5 // reference fuzzy float epsilon (expr/floatequals.go)
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val T0 = 1700000000000L // fixed epoch for deterministic tests
 

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,16 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * documented divergences: log-bucket sketches (HDR-style significant-digit
   * relative accuracy) and SQL NULL for unset (vs rendered 0).
   */
-class FixtureSpec extends AnyFunSuite {
+class FixtureSpec extends AnyFunSuite with TestSession {
 
   private val EPS = 1e-5
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   // 6s-aligned epoch so STRIDE(6s) buckets start exactly at T0
   private val T0 = 283333333L * 6000L

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * against hand-built DataFrame equivalents — broad coverage of the
   * parser → planner → builders path beyond the fixed oracle set.
   */
-class FuzzSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FuzzSpec extends AnyFunSuite with TestSession {
 
   private val dir = "/root/testdata/sf0.001"
   private lazy val catalog = Catalog.fromParquetDir(spark, dir, Seq("lineitem"))

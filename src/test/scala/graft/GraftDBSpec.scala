@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,16 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (/root/reference/README.md:78-395): tables are continuously-maintained
   * aggregations; queries re-aggregate stored accumulators.
   */
-class GraftDBSpec extends AnyFunSuite {
+class GraftDBSpec extends AnyFunSuite with TestSession {
 
   private val EPS = 1e-5
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private val T0 = 1700000000000L // bucket-aligned (multiple of 5m)
 
@@ -470,6 +463,45 @@ class GraftDBSpec extends AnyFunSuite {
       s"""SELECT requests FROM combined
          |ASOF '${iso((T0 / DayMs + 9) * DayMs)}' GROUP BY _""".stripMargin)
     assert(empty.collect().isEmpty)
+  }
+
+  test("window and dim queries ignore grown copies that own other days and users") {
+    // a store grown by copies on their own days and users answers a query
+    // aimed at the original data exactly as the original store does
+    val DayMs = 86400000L
+    val yaml =
+      """ev:
+        |  partitionby: [user_id]
+        |  sql: >
+        |    SELECT value, AVG(value) AS av FROM evs GROUP BY event_type, user_id, period(1h)
+        |""".stripMargin
+    import spark.implicits._
+    // integer-valued: sums are exact whatever the merge order
+    val base = (0 until 240).map(i => (T0 + (i % 4) * DayMs + (i / 4) * 600000L,
+      (i % 7).toLong, s"t${i % 3}", (1 + i % 9).toDouble))
+    val copies = for (c <- 1 to 3; (t, u, e, v) <- base)
+      yield (t + c * 32 * DayMs, u + c * 1000L, e, v)
+    def store(rows: Seq[(Long, Long, String, Double)]): GraftDB = {
+      val db = new GraftDB(spark, yaml,
+        Files.createTempDirectory("graft-grown").toString, () => T0 + 200 * DayMs)
+      db.insert("evs", rows.map { case (t, u, e, v) =>
+        (new java.sql.Timestamp(t), u, e, v) }.toDF("ts", "user_id", "event_type", "value"))
+      db
+    }
+    val (one, grown) = (store(base), store(base ++ copies))
+    def iso(ms: Long) =
+      java.time.Instant.ofEpochMilli(ms).toString.replace("Z", "")
+    val day = T0 / DayMs + 1
+    val window = s"SELECT value FROM ev ASOF '${iso(day * DayMs)}' " +
+      s"UNTIL '${iso((day + 1) * DayMs)}' GROUP BY event_type"
+    val dim = "SELECT value FROM ev WHERE user_id = 3 GROUP BY event_type, period(1h)"
+    def rows(db: GraftDB, sql: String): Seq[String] =
+      db.sql(sql).collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
+    for (q <- Seq(window, dim)) {
+      val expected = rows(one, q)
+      assert(expected.nonEmpty)
+      assert(rows(grown, q) == expected, q)
+    }
   }
 
   test("flush is incremental: untouched day partitions are not rewritten") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,14 +11,7 @@ import graft.functions._
   * sql/sql.go:81-89) and redis-style hash/set/script lookups
   * (sql/sql.go:92-106), probed inside codegen with no join or shuffle.
   */
-class LookupSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LookupSpec extends AnyFunSuite with TestSession {
 
   // ---- RangeTable core ----
 

@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.exprs.Builders.MergeOp
 import graft.sqlx.{DCmp, DCol, DConst}
 import graft.tools.Offline
 
-class OfflineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OfflineSpec extends AnyFunSuite with TestSession {
 
   private val T0 = 1700000000000L
   private val sch = StructType(Seq(

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline._
 
-class PipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PipelineSpec extends AnyFunSuite with TestSession {
 
   private def docs: DataFrame = {
     import spark.implicits._
@@ -2411,6 +2404,9 @@ class PipelineSpec extends AnyFunSuite {
       .select(col("vec_id"), col("__c")).collect()
       .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq
     assert(snap(sIdx) === snap(bIdx))
+    // the fallback lands every fresh id exactly once
+    val sIds = snap(sIdx).map(_._1)
+    assert(sIds.size === 100 && sIds.distinct.size === 100)
     val pb = Similarity.ivfTopK(spark, bIdx, bCents, col("embedding"),
         col("vec_id"), q, 10, nProbe = 4, quantized = true)
       .collect().map(_.getLong(0)).toSeq
@@ -2610,7 +2606,8 @@ class PipelineSpec extends AnyFunSuite {
     // drifted ingest: three NEW directions (axis 0 + axis 4/5/6) — every
     // drifted row's nearest FROZEN centroid is the axis-0 cell, so that
     // cell crowds, but the drifted cloud is multi-modal and a fresh
-    // k-means can re-balance it (the AnnDriftStress scenario)
+    // k-means can re-balance it (the scenario of BENCH_LOCAL.md
+    // "Round-14: frozen-centroid drift")
     def driftRow(id: Long, mix: Int, jitter: Double): (Long, Array[Float]) = {
       val rnd = new scala.util.Random(id * 13 + mix)
       (id, (0 until 12).map(d =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden plan-shape tests (the reference's planner_test.go analogue,
@@ -9,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * aggregation, top-k — so a refactor that silently de-optimizes a plan
   * fails here, not in production.
   */
-class PlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanSpec extends AnyFunSuite with TestSession {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -72,8 +64,8 @@ class PlanSpec extends AnyFunSuite {
   test("CROSSTAB pivots in one full-width scan; CROSSTABT totals read the cached pre-agg") {
     // plain CROSSTAB: partial agg + pivot fuse around ONE shuffle over ONE
     // source scan (the data-dependent value collect already ran at plan
-    // time as a column-pruned distinct — tools/CrosstabStress shows a
-    // persist here is a net loss at every tested scale)
+    // time as a column-pruned distinct — BENCH_LOCAL.md "CROSSTAB shape
+    // split" shows a persist here is a net loss at every tested scale)
     locally {
       val plan = SparkEntry.queries("q_crosstab")(spark, dir)
         .queryExecution.optimizedPlan
@@ -443,11 +435,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("plan hygiene sweep: every gate query stays free of scale-killer shapes") {
-    // tools/PlanSweep promoted into CI (r5 verdict #3): the shapes that
-    // silently serialize at 100 TB — a cartesian product, more than one
-    // single-partition exchange, or an unexpected WindowExec — must fail
-    // the build, not wait for a judge sweep. Keyed windows are legitimate
-    // per-group ranking in exactly these three gates:
+    // the PlanSweep tool (retired, at git 6fef9ce) promoted into CI (r5
+    // verdict #3): the shapes that silently serialize at 100 TB — a
+    // cartesian product, more than one single-partition exchange, or an
+    // unexpected WindowExec — must fail the build, not wait for a judge
+    // sweep. Keyed windows are legitimate per-group ranking in exactly
+    // these three gates:
     val windowWhitelist = Set("q_dedup_exact", "q_embed_top_pairs",
       "q_crosstab_shift", "q_crosstab_shift_fwd", "q_tfidf_keywords",
       "q_curation", "q_ann_batch",

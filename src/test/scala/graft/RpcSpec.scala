@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.server.{RpcClient, RpcServer}
 
@@ -10,14 +9,7 @@ import graft.server.{RpcClient, RpcServer}
   * (rpc/server/rpc_test.go): streaming insert, streamed query results,
   * follow delivering subsequent inserts.
   */
-class RpcSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class RpcSpec extends AnyFunSuite with TestSession {
 
   private val T0 = 1700000000000L
 

@@ -3,21 +3,13 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.server.HttpServer
 
 /** README quickstart over the HTTP surface (web/handler.go parity):
   * JSON-lines insert, dialect query, cardinality estimates.
   */
-class ServerSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ServerSpec extends AnyFunSuite with TestSession {
 
   private val T0 = 1700000000000L
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline._
@@ -23,14 +23,7 @@ import graft.pipeline._
   * (file list + size + mtime) and a snapshot marker on every persisted
   * batch-derived frame.
   */
-class SnapshotSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotSpec extends AnyFunSuite with TestSession {
 
   /** Grow `destDir` the way a landing dir grows in production: the new
     * parquet file is created OUTSIDE the destination (side dir) and moved

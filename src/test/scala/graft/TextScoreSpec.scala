@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TextScore
@@ -11,14 +10,7 @@ import graft.pipeline.TextAnalysis
   * every metric — including the split(limit=-1) edge semantics around
   * non-space whitespace that `trim` does not strip.
   */
-class TextScoreSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TextScoreSpec extends AnyFunSuite with TestSession {
 
   private val tricky = Seq(
     "",

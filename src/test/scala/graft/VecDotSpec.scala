@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VecDot
@@ -10,13 +9,7 @@ import graft.pipeline.Similarity
   * aggregate(zip_with(...)) fold it replaced — same index order, same
   * widening — in both codegen and interpreted (fallback) evaluation.
   */
-class VecDotSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class VecDotSpec extends AnyFunSuite with TestSession {
 
   private def fixture = {
     import spark.implicits._
