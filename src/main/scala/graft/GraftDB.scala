@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.exprs.Builders
+import graft.io.LocalFs.StoreWrite
 import graft.schema.{SchemaParser, TableConfig}
 import graft.sqlx.{FromTable, Parser, Query}
 import graft.streaming.MaterializedTable
@@ -474,7 +475,7 @@ final class GraftDB(
       // dir creation sits inside the same guard: the merge already
       // committed, so NOTHING on the journal path may fail the insert
       java.nio.file.Files.createDirectories(dir)
-      batch.toJSON.write.mode(SaveMode.Overwrite)
+      batch.toJSON.storeWrite.mode(SaveMode.Overwrite)
         .option("compression", "gzip").text(tmp.toUri.toString)
     } catch {
       case e: Exception =>

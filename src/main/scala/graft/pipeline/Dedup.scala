@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.LocalFs.StoreWrite
 
 /** Deduplication operators, each designed around one shuffle on a compact
   * key so they hold up at 100 TB:
@@ -50,7 +51,7 @@ object Dedup {
   def buildExactIndex(df: DataFrame, keyCol: Column, indexPath: String): Unit =
     clusterOn(df.select(md5(keyCol.cast("binary")).as("__h")).distinct()
         .withColumn("__hp", substring(col("__h"), 1, 2)), "__hp", HashPrefixes)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__hp").parquet(indexPath)
 
   /** Prefix counts of the index layouts: the exact index's `__hp` is the
@@ -367,7 +368,7 @@ object Dedup {
       writeIndexMeta(metaPath, fpLine, bumped)
       clusterOn(fresh.select(col("__h"), substring(col("__h"), 1, 2).as("__hp")),
           "__hp", HashPrefixes)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .storeWrite.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("__hp").parquet(indexPath)
       crashHook("dedup.appended")
     }
@@ -422,7 +423,7 @@ object Dedup {
       java.nio.file.Paths.get(srcPath, "_index.txt")).getOrElse(("fp=?", 0L))
     // HashPrefixes bounds both layouts' prefix counts (256 ≥ 32)
     clusterOn(spark.read.parquet(srcPath), "__hp", HashPrefixes)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__hp").parquet(destPath)
     crashHook("dedup.compact-data")
     writeIndexMeta(java.nio.file.Paths.get(destPath, "_index.txt"),
@@ -538,7 +539,7 @@ object Dedup {
     clusterOn(nearDupSig(df, textCol, idCol, n, numHashes, bands)
         .withColumn("__hp", pmod(xxhash64(col("id")), lit(IdPrefixes)).cast("int")),
         "__hp", IdPrefixes)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__hp").parquet(indexPath)
 
   // keyed by (path, corpus memo identity, shingle/banding recipe): a recipe
@@ -729,7 +730,7 @@ object Dedup {
       clusterOn(survivors
           .withColumn("__hp", pmod(xxhash64(col("id")), lit(IdPrefixes)).cast("int")),
           "__hp", IdPrefixes)
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .storeWrite.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("__hp").parquet(indexPath)
       crashHook("dedup.nd-appended")
     }
@@ -981,7 +982,7 @@ object Dedup {
         .withColumn("__pp", pmod(col("ph"), lit(PostPrefixes)).cast("int")),
         "__pp", PostPrefixes)
       .sortWithinPartitions(col("__pp"), col("ph"))
-      .write.mode(mode)
+      .storeWrite.mode(mode)
       .partitionBy("__pp").parquet(path)
 
   /** The containment doc-row write, clustered on the id-hash prefix. */
@@ -989,7 +990,7 @@ object Dedup {
                         mode: org.apache.spark.sql.SaveMode): Unit =
     clusterOn(sig.withColumn("__hp",
         pmod(xxhash64(col("id")), lit(IdPrefixes)).cast("int")), "__hp", IdPrefixes)
-      .write.mode(mode)
+      .storeWrite.mode(mode)
       .partitionBy("__hp").parquet(path)
 
   private val containmentIndexValidated =

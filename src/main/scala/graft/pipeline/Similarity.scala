@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.io.LocalFs.StoreWrite
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -414,7 +415,7 @@ object Similarity {
       // cells piling into one task; AQE coalesces the empties at small
       // scale
       .repartition(centroids.length, col("__c"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__c").parquet(indexPath)
     centroids
   }
@@ -816,7 +817,7 @@ object Similarity {
           .mkString("\n"))
       encode(fresh)
         .repartition(col("__c")) // ≤ one appended file per touched cell
-        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .storeWrite.mode(org.apache.spark.sql.SaveMode.Append)
         .partitionBy("__c").parquet(indexPath)
       crashHook("ann.appended")
       n
@@ -1113,7 +1114,7 @@ object Similarity {
     val df = spark.read.parquet(srcPath)
     val cells = df.select(col("__c")).distinct().count().toInt
     df.repartition(math.max(cells, 1), col("__c"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__c").parquet(destPath)
     crashHook("ann.compact-data")
     // meta LAST (the completion sentinel), through the same crash-atomic
@@ -1412,7 +1413,7 @@ object Similarity {
       .select(col("__id") +: pqEncode(col("__v"), books).as("__codes") +:
         (keep.map(col) :+ col("__c")): _*)
       .repartition(coarse.length, col("__c")) // ~one task per cell (see ivfBuild)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__c").parquet(indexPath)
     (coarse, books)
   }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.exprs.Builders
+import graft.io.LocalFs.StoreWrite
 import graft.schema.TableConfig
 import graft.sqlx._
 
@@ -15,11 +16,14 @@ import graft.sqlx._
   * bucket — the semantics plain watermark+append streaming cannot express
   * (SURVEY.md §7.4 risk #1).
   *
-  * Storage is generation dirs of parquet (`gen=N/`), swapped atomically via
-  * a marker file — the moral equivalent of the reference's
-  * `filestore_<nanos>` generations (row_store.go:424). At cluster scale the
-  * same merge is a Delta MERGE keyed on (dims, _time); the parquet-generation
-  * fallback keeps this repo dependency-free.
+  * Storage is commit generations of parquet day dirs (`commits/N/__day=d/`,
+  * `__bucket=k/` under `partitionby`), published atomically by the
+  * `MANIFEST` rename — the moral equivalent of the reference's
+  * `filestore_<nanos>` generations (row_store.go:424). Flush and compaction
+  * write through [[graft.io.LocalFs]] (`storeWrite`), which sets file modes
+  * in-process instead of forking a `chmod` per file, `.crc` and dir. At
+  * cluster scale the same merge is a Delta MERGE keyed on (dims, _time); the
+  * parquet-generation fallback keeps this repo dependency-free.
   */
 final class MaterializedTable(
     spark: SparkSession,
@@ -564,145 +568,149 @@ final class MaterializedTable(
 
     val keyNames = "_time" +: dims.map(_._1)
     val partialCached = partial.persist()
-    val touchedDf = partialCached
-      .select((unix_millis(col("_time")) / DayMs).cast("long").as("d"))
-      .distinct()
-    val touched: Set[Long] = touchedDf.collect().map(_.getLong(0)).toSet
-    // the touched-days job just materialized the cache THROUGH the
-    // CollectMetrics nodes above — fold their counts into the stats
-    // counters (queued = into the WHERE, filtered = WHERE drop,
-    // dropped = retention/backfill drop, inserted = reached the merge)
-    locally {
-      val om = touchedDf.queryExecution.observedMetrics
-      val observed = for {
-        q <- om.get("graft_queued").map(_.getLong(0))
-        w <- om.get("graft_after_where").map(_.getLong(0))
-        r <- om.get("graft_retained").map(_.getLong(0))
-      } yield (q, w, r)
-      // a batch whose rows are ALL filtered out can be re-planned to an
-      // empty relation (adaptive execution's empty propagation), which
-      // eliminates the CollectMetrics nodes with the rest of the subtree —
-      // exactly the batch whose drops most need counting. Fall back to
-      // direct counts: the path is rare and the batch is by definition
-      // small enough that nothing of it survived the filters.
-      val (q, w, r) = observed.getOrElse(
-        (queuedDf.count(), afterWhereDf.count(), retainedDf.count()))
-      statQueued.addAndGet(q)
-      statFiltered.addAndGet(q - w)
-      statDropped.addAndGet(w - r)
-      statInserted.addAndGet(r)
-    }
-    if (touched.isEmpty) { partialCached.unpersist(); return }
-
-    // merge ONLY the touched day partitions with the batch's partials.
-    // GROUP BY * derives dims per batch, so the stored partitions may carry
-    // dims this batch lacks (heterogeneous per-point dims, insert.go routes
-    // whatever arrives) — key the merge on the UNION of batch and stored
-    // dims, treating the missing side as NULL, or those rows collapse.
-    val merged = readDays(dayMap, touched, prevSchema, manifest.buckets.isDefined) match {
-      case None => partialCached
-      case Some(existing) =>
-        val storedDimCols = existing.columns
-          .filterNot(c => c == "_time" || c == "__bucket" || c.startsWith("__a"))
-        val mergeKeys = (keyNames ++ storedDimCols).distinct
-        val unioned = existing.unionByName(partialCached, allowMissingColumns = true)
-        val mergeCols = compiled.aggSpecs.map(s =>
-          Builders.MergeOp(s.merge, col(s.alias)).as(s.alias))
-        unioned.groupBy(mergeKeys.map(col): _*)
-          .agg(mergeCols.head, mergeCols.tail: _*)
-    }
-
-    // retention inside touched days (row_store.go:378-382); whole expired
-    // days drop out of the manifest below
-    val retained = config.retentionMillis match {
-      case Some(r) => merged.filter(col("_time") >= timestamp_millis(lit(now() - r)))
-      case None    => merged
-    }
-
-    // partitionby dims (cluster_follow.go:797-821's murmur3 partitioning,
-    // README.md:522-529's partition advice): each day dir is sub-partitioned
-    // into `__bucket=k` dirs by murmur3(dims) % N, so a dim-equality query
-    // prunes at the DIRECTORY level — 1/N of the files and bytes — the way
-    // the reference routes such queries to one cluster partition. Row-group
-    // min/max sorting alone cannot do this: hash-distributed files each
-    // hold a near-uniform sample of the dim range, so their stats never
-    // exclude anything (measured exponent 1.01 = zero pruning). Buckets are
-    // all-or-nothing per store (mixed day layouts would break partition
-    // discovery): a legacy store without the manifest line stays unbucketed.
-    // Files are still sorted (dims, _time) within each bucket so row-group
-    // stats prune further WITHIN the one bucket a query opens.
-    val withDay = retained
-      .withColumn("__day", (unix_millis(col("_time")) / DayMs).cast("long"))
-    // The layout is sticky: once a store commits bucketed days, EVERY later
-    // flush buckets — even a batch whose points all lack the partition dim
-    // (heterogeneous per-point dims are supported input; insert.go routes
-    // whatever arrives). A missing bucket dim hashes as a NULL literal,
-    // exactly how a stored NULL dim value hashes (Murmur3 skips null
-    // children), so rows land deterministically and dim-equality pruning
-    // stays a correct superset. Dropping the layout for one batch would mix
-    // bucketed and unbucketed day roots and wedge partition discovery.
-    val bucketed: Option[(Seq[String], Int)] =
-      manifest.buckets.orElse(
-        if (dayMap.isEmpty && config.partitionBy.nonEmpty)
-          Some((config.partitionBy,
-            Integer.getInteger("graft.bucketCount", MaterializedTable.BucketCount).intValue()))
-        else None)
-    val withBucket = bucketed match {
-      case Some((ds, n)) =>
-        val hashCols = ds.map { d =>
-          if (retained.columns.contains(d)) col(d)
-          else lit(null).cast(
-            prevSchema.flatMap(_.fields.find(_.name == d)).map(_.dataType)
-              .getOrElse(org.apache.spark.sql.types.StringType))
-        }
-        withDay.withColumn("__bucket", pmod(hash(hashCols: _*), lit(n)))
-      case None => withDay
-    }
-    val partCols = Seq("__day") ++ bucketed.map(_ => "__bucket")
-    val sortDims = config.partitionBy.filter(retained.columns.contains)
-    val toWrite0 = withBucket
-      .repartition(partCols.map(col): _*)
-      .sortWithinPartitions((sortDims :+ "_time").map(col): _*)
-
-    val next = version + 1
-    val commitRel = s"commits/$next"
-    toWrite0
-      .write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
-      .parquet(s"$storePath/$commitRel")
-    partialCached.unpersist()
-
-    // pick up the day dirs this commit produced
-    val newDays: Map[Long, String] = listCommitDays(next)
-
-    val horizonDay = config.retentionMillis
-      .map(r => (now() - r) / DayMs).getOrElse(Long.MinValue)
-    val nextMap = (dayMap -- touched)
-      .filter { case (d, _) => d >= horizonDay } ++ newDays
-    // committed schema = this write's columns (minus the __day partition
-    // col) unioned with every column a previous generation ever committed:
-    // untouched days flushed under an older definition still resolve, and
-    // reads never infer. All-nullable: a day missing a later-ALTERed
-    // accumulator column must read as NULL, not fail the reader.
-    val unionSchema = {
-      val newS = org.apache.spark.sql.types.StructType(
-        retained.schema.fields.map(_.copy(nullable = true)) ++
-          // the bucket partition column must be IN the committed schema:
-          // reads pass it explicitly, so discovery surfaces the dir values
-          // as a queryable column the planner can prune on
-          bucketed.map(_ => org.apache.spark.sql.types.StructField(
-            "__bucket", org.apache.spark.sql.types.IntegerType, nullable = true)))
-      prevSchema match {
-        case None => newS
-        case Some(old) =>
-          val newNames = newS.fieldNames.toSet
-          org.apache.spark.sql.types.StructType(
-            newS.fields ++
-              old.fields.filterNot(f => newNames(f.name)).map(_.copy(nullable = true)))
+    // released in the finally: a failed rewrite (an unreadable touched-day
+    // file, a full disk) must not leave the batch's partial aggregate
+    // persisted for the life of the session
+    try {
+      val touchedDf = partialCached
+        .select((unix_millis(col("_time")) / DayMs).cast("long").as("d"))
+        .distinct()
+      val touched: Set[Long] = touchedDf.collect().map(_.getLong(0)).toSet
+      // the touched-days job just materialized the cache THROUGH the
+      // CollectMetrics nodes above — fold their counts into the stats
+      // counters (queued = into the WHERE, filtered = WHERE drop,
+      // dropped = retention/backfill drop, inserted = reached the merge)
+      locally {
+        val om = touchedDf.queryExecution.observedMetrics
+        val observed = for {
+          q <- om.get("graft_queued").map(_.getLong(0))
+          w <- om.get("graft_after_where").map(_.getLong(0))
+          r <- om.get("graft_retained").map(_.getLong(0))
+        } yield (q, w, r)
+        // a batch whose rows are ALL filtered out can be re-planned to an
+        // empty relation (adaptive execution's empty propagation), which
+        // eliminates the CollectMetrics nodes with the rest of the subtree —
+        // exactly the batch whose drops most need counting. Fall back to
+        // direct counts: the path is rare and the batch is by definition
+        // small enough that nothing of it survived the filters.
+        val (q, w, r) = observed.getOrElse(
+          (queuedDf.count(), afterWhereDf.count(), retainedDf.count()))
+        statQueued.addAndGet(q)
+        statFiltered.addAndGet(q - w)
+        statDropped.addAndGet(w - r)
+        statInserted.addAndGet(r)
       }
-    }
-    writeManifest(next,
-      sinkBatches ++ sinkId.map(_ -> batchId), nextMap, unionSchema, bucketed)
-    gcSuperseded(next, nextMap)
+      if (touched.isEmpty) return
+
+      // merge ONLY the touched day partitions with the batch's partials.
+      // GROUP BY * derives dims per batch, so the stored partitions may carry
+      // dims this batch lacks (heterogeneous per-point dims, insert.go routes
+      // whatever arrives) — key the merge on the UNION of batch and stored
+      // dims, treating the missing side as NULL, or those rows collapse.
+      val merged = readDays(dayMap, touched, prevSchema, manifest.buckets.isDefined) match {
+        case None => partialCached
+        case Some(existing) =>
+          val storedDimCols = existing.columns
+            .filterNot(c => c == "_time" || c == "__bucket" || c.startsWith("__a"))
+          val mergeKeys = (keyNames ++ storedDimCols).distinct
+          val unioned = existing.unionByName(partialCached, allowMissingColumns = true)
+          val mergeCols = compiled.aggSpecs.map(s =>
+            Builders.MergeOp(s.merge, col(s.alias)).as(s.alias))
+          unioned.groupBy(mergeKeys.map(col): _*)
+            .agg(mergeCols.head, mergeCols.tail: _*)
+      }
+
+      // retention inside touched days (row_store.go:378-382); whole expired
+      // days drop out of the manifest below
+      val retained = config.retentionMillis match {
+        case Some(r) => merged.filter(col("_time") >= timestamp_millis(lit(now() - r)))
+        case None    => merged
+      }
+
+      // partitionby dims (cluster_follow.go:797-821's murmur3 partitioning,
+      // README.md:522-529's partition advice): each day dir is sub-partitioned
+      // into `__bucket=k` dirs by murmur3(dims) % N, so a dim-equality query
+      // prunes at the DIRECTORY level — 1/N of the files and bytes — the way
+      // the reference routes such queries to one cluster partition. Row-group
+      // min/max sorting alone cannot do this: hash-distributed files each
+      // hold a near-uniform sample of the dim range, so their stats never
+      // exclude anything (measured exponent 1.01 = zero pruning). Buckets are
+      // all-or-nothing per store (mixed day layouts would break partition
+      // discovery): a legacy store without the manifest line stays unbucketed.
+      // Files are still sorted (dims, _time) within each bucket so row-group
+      // stats prune further WITHIN the one bucket a query opens.
+      val withDay = retained
+        .withColumn("__day", (unix_millis(col("_time")) / DayMs).cast("long"))
+      // The layout is sticky: once a store commits bucketed days, EVERY later
+      // flush buckets — even a batch whose points all lack the partition dim
+      // (heterogeneous per-point dims are supported input; insert.go routes
+      // whatever arrives). A missing bucket dim hashes as a NULL literal,
+      // exactly how a stored NULL dim value hashes (Murmur3 skips null
+      // children), so rows land deterministically and dim-equality pruning
+      // stays a correct superset. Dropping the layout for one batch would mix
+      // bucketed and unbucketed day roots and wedge partition discovery.
+      val bucketed: Option[(Seq[String], Int)] =
+        manifest.buckets.orElse(
+          if (dayMap.isEmpty && config.partitionBy.nonEmpty)
+            Some((config.partitionBy,
+              Integer.getInteger("graft.bucketCount", MaterializedTable.BucketCount).intValue()))
+          else None)
+      val withBucket = bucketed match {
+        case Some((ds, n)) =>
+          val hashCols = ds.map { d =>
+            if (retained.columns.contains(d)) col(d)
+            else lit(null).cast(
+              prevSchema.flatMap(_.fields.find(_.name == d)).map(_.dataType)
+                .getOrElse(org.apache.spark.sql.types.StringType))
+          }
+          withDay.withColumn("__bucket", pmod(hash(hashCols: _*), lit(n)))
+        case None => withDay
+      }
+      val partCols = Seq("__day") ++ bucketed.map(_ => "__bucket")
+      val sortDims = config.partitionBy.filter(retained.columns.contains)
+      val toWrite0 = withBucket
+        .repartition(partCols.map(col): _*)
+        .sortWithinPartitions((sortDims :+ "_time").map(col): _*)
+
+      val next = version + 1
+      val commitRel = s"commits/$next"
+      toWrite0
+        .storeWrite.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
+        .parquet(s"$storePath/$commitRel")
+
+      // pick up the day dirs this commit produced
+      val newDays: Map[Long, String] = listCommitDays(next)
+
+      val horizonDay = config.retentionMillis
+        .map(r => (now() - r) / DayMs).getOrElse(Long.MinValue)
+      val nextMap = (dayMap -- touched)
+        .filter { case (d, _) => d >= horizonDay } ++ newDays
+      // committed schema = this write's columns (minus the __day partition
+      // col) unioned with every column a previous generation ever committed:
+      // untouched days flushed under an older definition still resolve, and
+      // reads never infer. All-nullable: a day missing a later-ALTERed
+      // accumulator column must read as NULL, not fail the reader.
+      val unionSchema = {
+        val newS = org.apache.spark.sql.types.StructType(
+          retained.schema.fields.map(_.copy(nullable = true)) ++
+            // the bucket partition column must be IN the committed schema:
+            // reads pass it explicitly, so discovery surfaces the dir values
+            // as a queryable column the planner can prune on
+            bucketed.map(_ => org.apache.spark.sql.types.StructField(
+              "__bucket", org.apache.spark.sql.types.IntegerType, nullable = true)))
+        prevSchema match {
+          case None => newS
+          case Some(old) =>
+            val newNames = newS.fieldNames.toSet
+            org.apache.spark.sql.types.StructType(
+              newS.fields ++
+                old.fields.filterNot(f => newNames(f.name)).map(_.copy(nullable = true)))
+        }
+      }
+      writeManifest(next,
+        sinkBatches ++ sinkId.map(_ -> batchId), nextMap, unionSchema, bucketed)
+      gcSuperseded(next, nextMap)
+    } finally partialCached.unpersist()
 
     // amortized maintenance: a store whose days froze under many different
     // flushes fragments across generations; consolidate opportunistically
@@ -866,7 +874,7 @@ final class MaterializedTable(
     withDay
       .repartition(partCols.map(col): _*)
       .sortWithinPartitions((sortDims :+ "_time").map(col): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
+      .storeWrite.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
       .parquet(s"$storePath/commits/$next")
     val newDays = listCommitDays(next)
     val horizonDay = config.retentionMillis

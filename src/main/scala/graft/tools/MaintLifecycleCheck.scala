@@ -53,6 +53,11 @@ object MaintLifecycleCheck {
     val t1 = db.maintenanceTick()
     check(t1.exists { case (n, s) => n == "nd" && s == s"compacted -> $idx-g1" },
       s"tick 1 flips to -g1 (got $t1)")
+    // the compaction's reads pin the superseded generation through the exec
+    // listener, which releases on the async listener bus — poll briefly
+    val flip0 = System.nanoTime()
+    while (db.maintainedStats("nd")._4 > 0 &&
+        System.nanoTime() - flip0 < 60L * 1000000000L) Thread.sleep(20)
     val s1 = db.maintainedStats("nd")
     check(s1 == ((s"$idx-g1", 1, 1, 0)),
       s"stats after flip: active=-g1 gen=1 pendingGc=1 leasedGc=0 (got $s1)")

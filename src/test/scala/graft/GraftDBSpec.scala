@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** End-to-end materialized-table semantics over the README quickstart fixture
   * (/root/reference/README.md:78-395): tables are continuously-maintained
@@ -525,6 +526,36 @@ class GraftDBSpec extends AnyFunSuite with TestSession {
     assert(rows.length == 2)
     assert(approx(d(rows(0).getAs[Any]("v")), 1.0))
     assert(approx(d(rows(1).getAs[Any]("v")), 12.0))
+  }
+
+  test("a failed day rewrite leaves no persisted partial; the next insert commits") {
+    val dir = Files.createTempDirectory("graft-failed-merge").toString
+    val db = new GraftDB(spark, schemaYaml, dir, () => T0 + 10000)
+    db.insert("inbound", points())
+    // truncate one parquet file of the day the next batch touches
+    val victim = {
+      val st = Files.walk(java.nio.file.Paths.get(dir, "combined", "commits"))
+      try st.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+      finally st.close()
+    }
+    val bytes = Files.readAllBytes(victim)
+    Files.write(victim, bytes.take(bytes.length / 2))
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](db.insert("inbound", points()))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "the failed insert left its partial aggregate persisted")
+
+    Files.write(victim, bytes)
+    db.insert("inbound", points())
+    // the failed insert committed nothing: two good inserts, like the README flow
+    val rows = db.sql(
+      """SELECT _points, requests, load_avg FROM combined
+        |GROUP BY server ORDER BY requests DESC""".stripMargin).collect()
+    assert(rows.length == 2)
+    assert(approx(d(rows(0).getAs[Any]("requests")), 1924.0))
+    assert(approx(d(rows(0).getAs[Any]("load_avg")), 0.3))
+    assert(approx(d(rows(0).getAs[Any]("_points")), 8.0))
+    db.close()
   }
 
   test("manifest GC soak: sustained micro-batches with concurrent readers stay bounded and untorn") {
