@@ -1241,7 +1241,8 @@ final class GraftDB(
             suffix.toLongOption
               .filter(v => v >= 0 && v < Int.MaxValue)
               .foreach { v =>
-                out += ((s"$basePath-g$suffix", v.toInt, genComplete(p)))
+                out += ((s"$basePath-g$suffix", v.toInt,
+                  pipeline.IndexMeta.complete(p)))
               }
           }
         }
@@ -1249,11 +1250,6 @@ final class GraftDB(
     }
     out.toSeq
   }
-
-  private def genComplete(dir: java.nio.file.Path): Boolean =
-    java.nio.file.Files.isDirectory(dir) &&
-      Seq("_centroids.txt", "_pq.txt", "_index.txt")
-        .exists(m => java.nio.file.Files.exists(dir.resolve(m)))
 
   /** On-disk generations of `basePath` other than `active`: the base dir
     * itself (when superseded) and every `<base>-gN` sibling, complete or
@@ -1815,8 +1811,7 @@ final class GraftDB(
                     // path (yaml `maintain:` without `maintainsource:`)
                     // would otherwise only error on the tick that first
                     // crosses budget, with maintainIndex's layout message
-                    if (java.nio.file.Files.exists(
-                        java.nio.file.Paths.get(active, "_pq.txt")))
+                    if (pipeline.IndexMeta.Pq.existsAt(active))
                       throw new IllegalStateException(
                         s"'$name' is an IVF-PQ index: its codes cannot " +
                           "re-cluster from themselves — enroll it with " +

@@ -86,63 +86,14 @@ object Dedup {
     df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*),
       df.schema)
 
-  // (indexPath, corpus memo identity) -> fingerprint header already
-  // validated by this JVM — same guard discipline as
-  // Similarity.ivfBuildIfMissing: the fingerprint scan runs once per
-  // (path, input content), not per query; a corpus dir that gains files
-  // changes the identity and re-validates (Similarity.corpusMemoIdentity)
-  private val exactIndexValidated =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
-  /** `_index.txt` as (seed-corpus fingerprint line, incremental-append count).
-    * The append counter is the rebuild tripwire: a fingerprint describes only
-    * the SEED corpus, so once [[exactIncremental]] has admitted batches the
-    * index holds history no corpus fingerprint can account for.
-    *
-    * An UNPARSEABLE appends value (corrupt/truncated file) reads as
-    * Long.MaxValue, not 0: the tripwire's failure modes are asymmetric — a
-    * spurious refusal costs an explicit directory delete, a missed one
-    * silently discards admitted history — so corruption must land on the
-    * refusing side.
-    */
-  private def readIndexMeta(metaPath: java.nio.file.Path): Option[(String, Long)] =
-    if (!java.nio.file.Files.exists(metaPath)) None
-    else {
-      val lines = java.nio.file.Files.readAllLines(metaPath)
-      val fp = if (lines.isEmpty) "" else lines.get(0).trim
-      Some((fp, IndexMeta.parseAppends(lines)))
-    }
-
-  /** Crash-atomic meta commit: tmp + ATOMIC_MOVE (the MANIFEST discipline,
-    * MaterializedTable.writeManifest) — a reader never observes a torn
-    * `_index.txt`, and a death before the move leaves the previous meta
-    * intact. The `_`-prefixed tmp name keeps parquet readers from ever
-    * seeing it as data; a stale tmp from a crashed writer is simply
-    * overwritten by the next commit.
-    */
-  private def writeIndexMeta(metaPath: java.nio.file.Path, fpLine: String,
-                             appends: Long): Unit = {
-    crashHook("dedup.meta-pre")
-    // an admit into a not-yet-existing index path (first batch IS the seed)
-    // commits its counter before any parquet file has created the dir
-    java.nio.file.Files.createDirectories(metaPath.getParent)
-    val tmp = metaPath.resolveSibling(metaPath.getFileName.toString + ".tmp")
-    java.nio.file.Files.writeString(tmp, s"$fpLine\nappends=$appends\n")
-    crashHook("dedup.meta-tmp")
-    java.nio.file.Files.move(tmp, metaPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    crashHook("dedup.meta-moved")
-  }
-
   /** Test-only fault injection for the incremental-admit commit path (same
     * contract as [[graft.streaming.MaterializedTable.crashHook]]): invoked at
     * "dedup.meta-pre" / "dedup.meta-tmp" / "dedup.meta-moved" (inside
-    * [[writeIndexMeta]]) and "dedup.appended" (after the survivors' parquet
+    * [[IndexMeta.commit]]) and "dedup.appended" (after the survivors' parquet
     * append in [[exactIncremental]]). The invariant a crash fuzz checks: a
     * death at ANY point can never leave admitted hashes in the index with
-    * `appends=0` — the state that would let a later corpus-change rebuild
-    * silently discard them.
+    * no appends counted — the state that would let a later corpus-change
+    * rebuild silently discard them.
     */
   @volatile private[graft] var crashHook: String => Unit = _ => ()
 
@@ -155,33 +106,14 @@ object Dedup {
     * the fingerprint only describes the seed corpus, so "different
     * fingerprint" no longer implies "stale" — rebuilding would silently
     * discard the entire admitted history. Delete the index directory (an
-    * explicit, auditable act) to start over.
+    * explicit, auditable act) to start over. See [[IndexMeta]].
     */
   def buildExactIndexIfMissing(df: DataFrame, keyCol: Column, idCol: Column,
-                               indexPath: String): Unit = {
-    val memoKey = (indexPath, Similarity.corpusMemoIdentity(df))
-    if (exactIndexValidated.containsKey(memoKey)) return
-    val metaPath = java.nio.file.Paths.get(indexPath, "_index.txt")
-    val header = s"fp=${Similarity.datasetFingerprint(df, idCol)}"
-    readIndexMeta(metaPath) match {
-      case Some((fp, _)) if fp == header =>
-        exactIndexValidated.put(memoKey, header)
-        return
-      case Some((_, appends)) if appends > 0 =>
-        throw new IllegalStateException(
-          s"exact-dedup index at $indexPath holds $appends incremental " +
-            "append(s) that a corpus-change rebuild would silently discard; " +
-            "delete the index directory explicitly to rebuild from scratch")
-      case _ => // absent or stale seed-only index: rebuild below
-    }
-    // a rebuild invalidates any OTHER corpus's cached validation for this
-    // path: without this, swap corpus A -> B -> A within one session and
-    // the stale A entry skips the fingerprint check against a B-built index
-    exactIndexValidated.keySet.removeIf(_._1 == indexPath)
-    buildExactIndex(df, keyCol, indexPath)
-    writeIndexMeta(metaPath, header, appends = 0L)
-    exactIndexValidated.put(memoKey, header)
-  }
+                               indexPath: String): Unit =
+    IndexMeta.validateOrBuild(IndexMeta.Dedup, indexPath, "exact-dedup index",
+        Similarity.corpusMemoIdentity(df))(
+      s"fp=${Similarity.datasetFingerprint(df, idCol)}")(
+      buildExactIndex(df, keyCol, indexPath))
 
   // Read-only (admit = false) incremental-dedup PLANS are pure functions of
   // (index snapshot, batch content, recipe): memo them per session so a
@@ -221,9 +153,7 @@ object Dedup {
 
   private def memoReadOnly(op: String, indexPath: String, batch: DataFrame,
                            recipe: String)(build: => DataFrame): DataFrame = {
-    val metaPath = java.nio.file.Paths.get(indexPath, "_index.txt")
-    if (!java.nio.file.Files.exists(metaPath)) return build
-    val meta = java.nio.file.Files.readString(metaPath)
+    val meta = IndexMeta.content(indexPath, IndexMeta.Dedup).getOrElse(return build)
     val sig = Similarity.inputSnapshotSig(batch) match {
       case Some(s) => s
       case None => return build // opaque batch: no content identity, no memo
@@ -235,7 +165,7 @@ object Dedup {
     else {
       val built = build
       val metaNow =
-        try java.nio.file.Files.readString(metaPath)
+        try IndexMeta.content(indexPath, IndexMeta.Dedup).orNull
         catch { case _: Exception => null }
       if (metaNow == meta) readOnlyPlans.put(key, (canon, built))
       built
@@ -285,32 +215,11 @@ object Dedup {
     // shuffle joins on __h — the index then shuffles ONCE, amortized over
     // the whole batch, instead of never (the map-only small-batch shape).
     //
-    // Sizing is two-tier to keep the daily path job-free: when the
-    // optimizer's size estimate already proves the batch small (≤128 MB of
-    // input bytes can't hold enough distinct texts to threaten the
-    // broadcast bound), skip the counting job entirely; only ambiguous or
-    // large batches pay one persisted count of the compact hash frame.
-    // maxBroadcastHashes <= 0 is an explicit "always shuffle" override.
-    // The stats shortcut must bound ROWS, not bytes: sizeInBytes for a
-    // parquet scan is COMPRESSED file bytes, and highly compressible
-    // short-text batches pack far more distinct texts per byte than the
-    // 128 MB-input intuition allows — the exact batch shape that would ship
-    // a multi-hundred-MB hash set to every executor through the broadcast
-    // path the fallback exists to protect. Use the optimizer's row count
-    // when it has one; otherwise bound rows by bytes with conservative
-    // constants (up to 10× parquet text compression, ≥ 8 bytes per distinct
-    // stored text). When in doubt, fall through to the counted path.
-    val stats =
-      try Some(batch.queryExecution.optimizedPlan.stats)
-      catch { case _: Exception => None }
-    val estRows: BigInt = stats.flatMap(_.rowCount).getOrElse {
-      val estBytes = stats.map(s => BigInt(s.sizeInBytes.toString))
-        .getOrElse(BigInt(-1))
-      if (estBytes < 0) BigInt(-1)
-      else estBytes * 10 / 8 // decompressed upper bound / min row bytes
-    }
-    val smallByStats = maxBroadcastHashes > 0 &&
-      estRows >= 0 && estRows <= BigInt(maxBroadcastHashes)
+    // Sizing is two-tier to keep the daily path job-free
+    // ([[IndexMeta.fitsBroadcast]]): only ambiguous or large batches pay one
+    // count of the compact hash frame. maxBroadcastHashes <= 0 is an
+    // explicit "always shuffle" override.
+    //
     // PERSIST the compact (hash, id) winners frame (FIFO-capped scan-saver):
     // it has up to four consumers — the hits probe broadcast, the anti-join,
     // the admit append, and the survivors broadcast — and broadcast
@@ -319,10 +228,7 @@ object Dedup {
     // stats-proven daily path stays job-free; the counted fallback reuses
     // the same cache for its count.
     val bh = graft.PersistCache.persistTagged(bh0, snapSig)
-    val small =
-      if (smallByStats) true
-      else if (maxBroadcastHashes <= 0) false
-      else bh.count() <= maxBroadcastHashes
+    val small = IndexMeta.fitsBroadcast(batch, maxBroadcastHashes)(bh.count())
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // pin the index SNAPSHOT by a driver-side file listing: the survivor
     // plan below stays on the pre-append files even after this call's own
@@ -348,24 +254,10 @@ object Dedup {
       if (admit && small) onDriver(freshPlan)
       else graft.PersistCache.persist(freshPlan)
     if (admit) {
-      // Bump the append counter in `_index.txt` BEFORE the parquet append:
-      // the counter is what stops a later corpus-keyed rebuild from
-      // discarding admitted history (see [[buildExactIndexIfMissing]]), and
-      // its failure modes are asymmetric. Counter-first, a death between the
-      // two commits leaves appends=1 over an unchanged index — a spurious
-      // refusal, resolved by an explicit delete. Append-first (the r12
-      // ordering) the same death left admitted hashes under appends=0, and
-      // the next fingerprint mismatch silently rebuilt over them.
-      val metaPath = java.nio.file.Paths.get(indexPath, "_index.txt")
-      val (fpLine, appends) = readIndexMeta(metaPath).getOrElse(("fp=?", 0L))
-      // SATURATING increment (IndexMeta.saturatedBump): a corrupt counter
-      // reads as Long.MaxValue (the refusing side), and `MaxValue + 1` would
-      // wrap to MinValue — the next staleness check would then see
-      // appends <= 0 and silently rebuild over admitted history, exactly the
-      // state the tripwire exists to prevent. Once saturated the counter
-      // stays pinned at the refusal.
-      val bumped = IndexMeta.saturatedBump(appends)
-      writeIndexMeta(metaPath, fpLine, bumped)
+      // the append counter goes up BEFORE the parquet append: it is what
+      // stops a later corpus-keyed rebuild from discarding admitted history
+      // (see [[buildExactIndexIfMissing]] and [[IndexMeta.bump]])
+      IndexMeta.bump(indexPath, IndexMeta.Dedup)
       clusterOn(fresh.select(col("__h"), substring(col("__h"), 1, 2).as("__hp")),
           "__hp", HashPrefixes)
         .storeWrite.mode(org.apache.spark.sql.SaveMode.Append)
@@ -419,15 +311,13 @@ object Dedup {
   private def compactClustered(spark: org.apache.spark.sql.SparkSession,
                                srcPath: String, destPath: String): Unit = {
     // meta snapshot BEFORE the data rewrite (same pinning as the ANN twin)
-    val (fpLine, appends) = readIndexMeta(
-      java.nio.file.Paths.get(srcPath, "_index.txt")).getOrElse(("fp=?", 0L))
+    val meta = IndexMeta.carried(srcPath, IndexMeta.Dedup)
     // HashPrefixes bounds both layouts' prefix counts (256 ≥ 32)
     clusterOn(spark.read.parquet(srcPath), "__hp", HashPrefixes)
       .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__hp").parquet(destPath)
     crashHook("dedup.compact-data")
-    writeIndexMeta(java.nio.file.Paths.get(destPath, "_index.txt"),
-      fpLine, appends)
+    IndexMeta.commit(destPath, IndexMeta.Dedup, meta)
     crashHook("dedup.compact-done")
   }
 
@@ -439,25 +329,8 @@ object Dedup {
     * compacted dest; on failure delete the dest and re-compact from the
     * intact source.
     */
-  def requireIndexComplete(indexPath: String): Unit = {
-    val dir = java.nio.file.Paths.get(indexPath)
-    if (!java.nio.file.Files.isDirectory(dir)) return
-    if (java.nio.file.Files.exists(dir.resolve("_index.txt"))) return
-    val hasData = {
-      val s = java.nio.file.Files.list(dir)
-      // flat layouts (exact/near-dup: __hp= dirs at the root) and the
-      // containment layout (docs/ + post/ subtables) both count as data
-      try s.anyMatch { p =>
-        val nm = p.getFileName.toString
-        nm.startsWith("__hp=") || nm == "docs" || nm == "post"
-      }
-      finally s.close()
-    }
-    if (hasData) throw new IllegalStateException(
-      s"dedup index at $indexPath holds data but no _index.txt — an " +
-        "incomplete compacted copy; flipping readers to it would disarm " +
-        "the appends-refusal. Delete it and re-compact from the source")
-  }
+  def requireIndexComplete(indexPath: String): Unit =
+    IndexMeta.requireComplete(indexPath, Seq(IndexMeta.Dedup))
 
   // ---- incremental NEAR-DUP dedup against a persistent MinHash index ----
   //
@@ -542,46 +415,22 @@ object Dedup {
       .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__hp").parquet(indexPath)
 
-  // keyed by (path, corpus memo identity, shingle/banding recipe): a recipe
-  // change is a different index even over the same corpus, so it must not
-  // hit another recipe's validation
-  private val nearDupIndexValidated =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int, Int), String]()
-
   /** [[buildNearDupIndex]] only if the index is absent or was built from a
     * different (corpus, shingle/banding recipe); refuses a corpus-change
     * rebuild once incremental admissions exist — the [[buildExactIndexIfMissing]]
-    * tripwire, word for word, because the failure it guards is identical:
-    * a rebuild keyed on the seed fingerprint would silently discard every
-    * admitted batch.
+    * tripwire, because the failure it guards is identical: a rebuild keyed
+    * on the seed fingerprint would silently discard every admitted batch. A
+    * recipe change is a different index even over the same corpus, so it is
+    * part of the memo identity.
     */
   def buildNearDupIndexIfMissing(df: DataFrame, textCol: Column, idCol: Column,
                                  indexPath: String, n: Int, numHashes: Int,
-                                 bands: Int): Unit = {
-    val memoKey = (indexPath, Similarity.corpusMemoIdentity(df),
-      n, numHashes, bands)
-    if (nearDupIndexValidated.containsKey(memoKey)) return
-    val metaPath = java.nio.file.Paths.get(indexPath, "_index.txt")
-    val header = s"fp=${Similarity.datasetFingerprint(df, idCol)};" +
-      s"n=$n;k=$numHashes;b=$bands"
-    readIndexMeta(metaPath) match {
-      case Some((fp, _)) if fp == header =>
-        nearDupIndexValidated.put(memoKey, header)
-        return
-      case Some((_, appends)) if appends > 0 =>
-        throw new IllegalStateException(
-          s"near-dup index at $indexPath holds $appends incremental " +
-            "append(s) that a corpus-change rebuild would silently discard; " +
-            "delete the index directory explicitly to rebuild from scratch")
-      case _ => // absent or stale seed-only index: rebuild below
-    }
-    // a rebuild invalidates every other (corpus, recipe) validation cached
-    // for this path — the mid-session swap hazard the ANN memo also guards
-    nearDupIndexValidated.keySet.removeIf(_._1 == indexPath)
-    buildNearDupIndex(df, textCol, idCol, indexPath, n, numHashes, bands)
-    writeIndexMeta(metaPath, header, appends = 0L)
-    nearDupIndexValidated.put(memoKey, header)
-  }
+                                 bands: Int): Unit =
+    IndexMeta.validateOrBuild(IndexMeta.Dedup, indexPath, "near-dup index",
+        s"${Similarity.corpusMemoIdentity(df)}|$n|$numHashes|$bands")(
+      s"fp=${Similarity.datasetFingerprint(df, idCol)};" +
+        s"n=$n;k=$numHashes;b=$bands")(
+      buildNearDupIndex(df, textCol, idCol, indexPath, n, numHashes, bands))
 
   /** Batch rows that survive near-dup dedup against BOTH the persistent
     * index at `indexPath` (any admitted doc with Jaccard ≥ `threshold`
@@ -632,24 +481,9 @@ object Dedup {
       nearDupSig(batch, textCol, idCol, n, numHashes, bands),
       Similarity.inputSnapshotSig(batch))
     // two-tier broadcast sizing on the batch's BAND-ROW count (docs × bands
-    // — the frame that actually ships): stats shortcut when the optimizer
-    // already proves the batch small, one count otherwise, <= 0 = always
-    // shuffle. Same rationale as exactIncremental's; the row bound uses the
-    // optimizer's row count when present, else conservative byte constants.
-    val stats =
-      try Some(batch.queryExecution.optimizedPlan.stats)
-      catch { case _: Exception => None }
-    val estDocs: BigInt = stats.flatMap(_.rowCount).getOrElse {
-      val estBytes = stats.map(s => BigInt(s.sizeInBytes.toString))
-        .getOrElse(BigInt(-1))
-      if (estBytes < 0) BigInt(-1) else estBytes * 10 / 8
-    }
-    val smallByStats = maxBroadcastBandRows > 0 && estDocs >= 0 &&
-      estDocs * bands <= BigInt(maxBroadcastBandRows)
-    val small =
-      if (smallByStats) true
-      else if (maxBroadcastBandRows <= 0) false
-      else prep.count() * bands <= maxBroadcastBandRows
+    // — the frame that actually ships), as in exactIncremental
+    val small = IndexMeta.fitsBroadcast(batch, maxBroadcastBandRows,
+      perRow = bands)(prep.count())
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // pin the index SNAPSHOT by a driver-side file listing (as in
     // exactIncremental: the survivor plan must not observe the rows this
@@ -723,10 +557,7 @@ object Dedup {
     if (admit) {
       // counter bump BEFORE the parquet append (see exactIncremental: the
       // asymmetric failure modes demand the refusing side)
-      val metaPath = java.nio.file.Paths.get(indexPath, "_index.txt")
-      val (fpLine, appends) = readIndexMeta(metaPath).getOrElse(("fp=?", 0L))
-      val bumped = IndexMeta.saturatedBump(appends)
-      writeIndexMeta(metaPath, fpLine, bumped)
+      IndexMeta.bump(indexPath, IndexMeta.Dedup)
       clusterOn(survivors
           .withColumn("__hp", pmod(xxhash64(col("id")), lit(IdPrefixes)).cast("int")),
           "__hp", IdPrefixes)
@@ -963,8 +794,11 @@ object Dedup {
   def buildContainmentIndex(df: DataFrame, textCol: Column, idCol: Column,
                             indexPath: String, n: Int,
                             numProbes: Int = 16): Unit = {
-    val sig = graft.PersistCache.persist(
-      containmentSig(df, textCol, idCol, n, numProbes))
+    // tagged with the corpus listing: a rebuild over a grown corpus dir
+    // must not alias the signatures cached by the previous build
+    val sig = graft.PersistCache.persistTagged(
+      containmentSig(df, textCol, idCol, n, numProbes),
+      Similarity.inputSnapshotSig(df))
     writePostings(sig, s"$indexPath/post", org.apache.spark.sql.SaveMode.Overwrite)
     writeDocs(sig, s"$indexPath/docs", org.apache.spark.sql.SaveMode.Overwrite)
   }
@@ -993,38 +827,18 @@ object Dedup {
       .storeWrite.mode(mode)
       .partitionBy("__hp").parquet(path)
 
-  private val containmentIndexValidated =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int, Int), String]()
-
   /** [[buildContainmentIndex]] only if absent or built from a different
     * (corpus, recipe); refuses a corpus-change rebuild once admissions
     * exist — the same tripwire as the other two incremental indexes.
     */
   def buildContainmentIndexIfMissing(df: DataFrame, textCol: Column,
                                      idCol: Column, indexPath: String,
-                                     n: Int, numProbes: Int = 16): Unit = {
-    val memoKey = (indexPath, Similarity.corpusMemoIdentity(df),
-      n, numProbes)
-    if (containmentIndexValidated.containsKey(memoKey)) return
-    val metaPath = java.nio.file.Paths.get(indexPath, "_index.txt")
-    val header = s"fp=${Similarity.datasetFingerprint(df, idCol)};" +
-      s"n=$n;k=$numProbes;kind=containment"
-    readIndexMeta(metaPath) match {
-      case Some((fp, _)) if fp == header =>
-        containmentIndexValidated.put(memoKey, header)
-        return
-      case Some((_, appends)) if appends > 0 =>
-        throw new IllegalStateException(
-          s"containment index at $indexPath holds $appends incremental " +
-            "append(s) that a corpus-change rebuild would silently discard; " +
-            "delete the index directory explicitly to rebuild from scratch")
-      case _ =>
-    }
-    containmentIndexValidated.keySet.removeIf(_._1 == indexPath)
-    buildContainmentIndex(df, textCol, idCol, indexPath, n, numProbes)
-    writeIndexMeta(metaPath, header, appends = 0L)
-    containmentIndexValidated.put(memoKey, header)
-  }
+                                     n: Int, numProbes: Int = 16): Unit =
+    IndexMeta.validateOrBuild(IndexMeta.Dedup, indexPath, "containment index",
+        s"${Similarity.corpusMemoIdentity(df)}|$n|$numProbes")(
+      s"fp=${Similarity.datasetFingerprint(df, idCol)};" +
+        s"n=$n;k=$numProbes;kind=containment")(
+      buildContainmentIndex(df, textCol, idCol, indexPath, n, numProbes))
 
   /** Batch rows that survive containment dedup against BOTH the index (any
     * admitted doc with containment ≥ `threshold` rejects the batch row —
@@ -1067,28 +881,15 @@ object Dedup {
       containmentSig(batch, textCol, idCol, n, numProbes),
       Similarity.inputSnapshotSig(batch))
     // two-tier sizing on the batch's exploded HASH rows (the larger of the
-    // two broadcast frames; probe rows are k per doc, strictly smaller)
-    val stats =
-      try Some(batch.queryExecution.optimizedPlan.stats)
-      catch { case _: Exception => None }
-    val estDocs: BigInt = stats.flatMap(_.rowCount).getOrElse {
-      val estBytes = stats.map(s => BigInt(s.sizeInBytes.toString))
-        .getOrElse(BigInt(-1))
-      if (estBytes < 0) BigInt(-1) else estBytes * 10 / 8
+    // two broadcast frames; probe rows are k per doc, strictly smaller). A
+    // doc's hash count is bounded by its token count; the byte-derived row
+    // bound already over-counts docs ~10×, so docs ≈ hash rows there — when
+    // the stats can't prove it, one agg on the persisted prep settles both
+    // counts exactly
+    val small = IndexMeta.fitsBroadcast(batch, maxBroadcastRows) {
+      val r = prep.agg(sum(size(col("hs")))).collect()(0)
+      if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    // a doc's hash count is bounded by its token count; the byte-derived
-    // row bound already over-counts docs ~10×, so docs ≈ hash rows here —
-    // when the stats can't prove it, one agg on the persisted prep settles
-    // both counts exactly
-    val smallByStats = maxBroadcastRows > 0 &&
-      estDocs >= 0 && estDocs <= BigInt(maxBroadcastRows)
-    val small =
-      if (smallByStats) true
-      else if (maxBroadcastRows <= 0) false
-      else {
-        val r = prep.agg(sum(size(col("hs")))).collect()(0)
-        (if (r.isNullAt(0)) 0L else r.getLong(0)) <= maxBroadcastRows
-      }
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // pin BOTH table snapshots before any append
     val postFiles = IndexSnapshot.list(spark, s"$indexPath/post")
@@ -1210,10 +1011,7 @@ object Dedup {
       else graft.PersistCache.persist(losersPlan)
     val survivors = prep.join(losers, Seq("id"), "left_anti")
     if (admit) {
-      val metaPath = java.nio.file.Paths.get(indexPath, "_index.txt")
-      val (fpLine, appends) = readIndexMeta(metaPath).getOrElse(("fp=?", 0L))
-      val bumped = IndexMeta.saturatedBump(appends)
-      writeIndexMeta(metaPath, fpLine, bumped)
+      IndexMeta.bump(indexPath, IndexMeta.Dedup)
       // POSTINGS FIRST (see the crash-ordering note)
       writePostings(survivors, s"$indexPath/post", org.apache.spark.sql.SaveMode.Append)
       crashHook("dedup.cn-post")
@@ -1231,16 +1029,15 @@ object Dedup {
     */
   def containmentIndexCompactTo(spark: org.apache.spark.sql.SparkSession,
                                 srcPath: String, destPath: String): Unit = {
-    val (fpLine, appends) = readIndexMeta(
-      java.nio.file.Paths.get(srcPath, "_index.txt")).getOrElse(("fp=?", 0L))
-    val docs = graft.PersistCache.persist(
-      spark.read.parquet(s"$srcPath/docs")
-        .select(col("id"), col("hs"), col("pr")).dropDuplicates("id"))
+    val meta = IndexMeta.carried(srcPath, IndexMeta.Dedup)
+    val srcDocs = spark.read.parquet(s"$srcPath/docs")
+    val docs = graft.PersistCache.persistTagged(
+      srcDocs.select(col("id"), col("hs"), col("pr")).dropDuplicates("id"),
+      Similarity.inputSnapshotSig(srcDocs))
     writePostings(docs, s"$destPath/post", org.apache.spark.sql.SaveMode.Overwrite)
     writeDocs(docs, s"$destPath/docs", org.apache.spark.sql.SaveMode.Overwrite)
     crashHook("dedup.compact-data")
-    writeIndexMeta(java.nio.file.Paths.get(destPath, "_index.txt"),
-      fpLine, appends)
+    IndexMeta.commit(destPath, IndexMeta.Dedup, meta)
     crashHook("dedup.compact-done")
   }
 
@@ -1522,9 +1319,9 @@ object Dedup {
                      stripes: Int = 1): DataFrame = {
     require(numProbes >= 1)
     require(stripes >= 1, "stripes must be >= 1")
-    val base = graft.PersistCache.persist(
+    val base = graft.PersistCache.persistTagged(
       df.select(idCol.as("id"), shingles(textCol, n).as("sh"))
-        .filter(size(col("sh")) > 0))
+        .filter(size(col("sh")) > 0), Similarity.inputSnapshotSig(df))
     val hashed = base.select(col("id"), transform(col("sh"), s => xxhash64(s)).as("hs"))
     // argmin over seeded variants — the native ArgMinProbes (bit-identical
     // to the struct-min HOF, PipelineSpec-pinned), already de-duplicated

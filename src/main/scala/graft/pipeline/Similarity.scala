@@ -485,7 +485,7 @@ object Similarity {
     * PLUS the plan hash when the inputs are files (content-true — listing
     * growth or a different transformation both invalidate), else the plan
     * hash alone (in-plan data is its own identity; opaque RDD-backed plans
-    * keep the documented plan-shape-only caveat on [[ivfValidated]]).
+    * keep the documented plan-shape-only caveat on [[ivfBuildIfMissing]]).
     */
   private[graft] def corpusMemoIdentity(df: DataFrame): String = {
     val planHash = df.queryExecution.analyzed.semanticHash()
@@ -501,105 +501,38 @@ object Similarity {
     * deployments build once and amortize over queries; the fingerprint check
     * costs one count+hash scan, not a rebuild. Centroids are persisted next
     * to the index; the sample is deterministic, so reuse is exact.
+    *
+    * Validation is memoized per (path, [[corpusMemoIdentity]], nCentroids,
+    * refineIters) in [[IndexMeta.validateOrBuild]]: fingerprinting the
+    * corpus on EVERY probe is itself anti-scale — at 100 TB the staleness
+    * check would cost a full id-column scan per query. The identity is the
+    * file listing + sizes + mtimes + plan hash for file-backed corpora (so a
+    * corpus dir that gains files re-validates), plan hash alone for in-plan
+    * data; only same-size same-mtime byte mutation under an identical plan
+    * evades it, and that also invalidates any open Spark scan.
+    *
+    * The header keys the index by dataset AND build recipe (v2: exact
+    * decimal Lloyd means), so a recipe change never silently reuses old
+    * cells. An unparseable meta reads as STALE, never as a bricked path;
+    * one whose `appends` trailer shows [[ivfAppend]]ed history refuses the
+    * corpus-change rebuild instead (delete the index directory to start
+    * over), the contract of [[Dedup.buildExactIndexIfMissing]].
     */
-  // (indexPath, corpus memo identity, nCentroids, refineIters) -> centroids,
-  // recorded after this JVM has fingerprint-validated (or built) the index
-  // once for that input. Fingerprinting the corpus on EVERY probe is itself
-  // anti-scale — at 100 TB the staleness check would cost a full id-column
-  // scan per query. The identity is [[corpusMemoIdentity]]: file listing +
-  // sizes + mtimes + plan hash for file-backed corpora (so a corpus dir
-  // that gains files re-validates instead of hitting a stale entry), plan
-  // hash alone for in-plan data; only same-size same-mtime byte mutation
-  // under an identical plan evades it, and that also invalidates any open
-  // Spark scan.
-  private val ivfValidated = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), Seq[(Int, Seq[Float])]]()
-
   def ivfBuildIfMissing(df: DataFrame, vecCol: Column, idCol: Column,
                         nCentroids: Int, indexPath: String,
-                        refineIters: Int = 2): Seq[(Int, Seq[Float])] = {
-    val memoKey = (indexPath, corpusMemoIdentity(df), nCentroids, refineIters)
-    val hit = ivfValidated.get(memoKey)
-    if (hit != null) return hit
-    val metaPath = java.nio.file.Paths.get(indexPath, "_centroids.txt")
-    // the header keys the cache by dataset AND build recipe (v2: exact
-    // decimal Lloyd means) — a recipe change must not silently reuse old
-    // cells. The ACTUAL centroid count is persisted too: a corpus smaller
-    // than nCentroids yields fewer cells, and parsing against the REQUESTED
-    // count would reject the valid meta forever (one silent rebuild per JVM).
-    val recipe = s"fp=${datasetFingerprint(df, idCol)};lloyd=$refineIters;v=2"
-    // any unparseable header/body (crash-truncated, hand-mangled) reads as
-    // STALE — rebuild — instead of throwing and bricking the index path
-    // until someone deletes the file by hand... UNLESS an `appends=` marker
-    // shows the index holds incremental history (see the refusal below).
-    val metaLines =
-      if (!java.nio.file.Files.exists(metaPath)) None
-      else scala.util.Try(java.nio.file.Files.readAllLines(metaPath)).toOption
-    val reused = metaLines.flatMap { lines =>
-      scala.util.Try {
-        val h0 = if (lines.isEmpty) "" else lines.get(0)
-        if (!h0.startsWith(recipe + ";n=")) None
-        else {
-          val nAct = h0.stripPrefix(recipe + ";n=").toInt
-          // body = exactly nAct centroid lines; an [[ivfAppend]]ed index
-          // carries `appends=` trailer lines after them
-          if (lines.size() < nAct + 1 ||
-              (nAct + 1 until lines.size())
-                .exists(i => !lines.get(i).trim.startsWith("appends="))) None
-          else Some((0 until nAct).map { i =>
-            i -> lines.get(i + 1).split(",").toSeq.map(_.toFloat)
-          })
-        }
-      }.toOption.flatten
-    }
-    reused match {
-      case Some(centroids) =>
-        ivfValidated.put(memoKey, centroids)
-        return centroids
-      case None =>
-        // an index that has accumulated incremental appends REFUSES a
-        // corpus-change rebuild: the fingerprint describes only the SEED
-        // corpus, so "different fingerprint" no longer implies "stale" —
-        // rebuilding would silently discard the appended history. Delete
-        // the index directory (an explicit, auditable act) to start over.
-        // Same contract as Dedup.buildExactIndexIfMissing.
-        val appends = metaLines.map(parseAppends).getOrElse(0L)
-        if (appends > 0)
-          throw new IllegalStateException(
-            s"IVF index at $indexPath holds $appends incremental append(s) " +
-              "that a corpus-change rebuild would silently discard; delete " +
-              "the index directory explicitly to rebuild from scratch")
-    }
-    val centroids = ivfBuild(df, vecCol, idCol, nCentroids, indexPath, refineIters)
-    val body = (s"$recipe;n=${centroids.length}" +:
-      centroids.map(_._2.map(f => f.toString).mkString(","))).mkString("\n")
-    writeMetaAtomic(metaPath, body)
-    ivfValidated.put(memoKey, centroids)
-    centroids
-  }
-
-  /** Crash-atomic index-meta commit (tmp + ATOMIC_MOVE, the MANIFEST
-    * discipline): a reader never observes a torn `_centroids.txt`/`_pq.txt`,
-    * and a death before the move leaves the previous meta intact.
-    */
-  private def writeMetaAtomic(metaPath: java.nio.file.Path, body: String): Unit = {
-    crashHook("ann.meta-pre")
-    val tmp = metaPath.resolveSibling(metaPath.getFileName.toString + ".tmp")
-    java.nio.file.Files.writeString(tmp, body)
-    crashHook("ann.meta-tmp")
-    java.nio.file.Files.move(tmp, metaPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    crashHook("ann.meta-moved")
-  }
+                        refineIters: Int = 2): Seq[(Int, Seq[Float])] =
+    IndexMeta.validateOrBuild(IndexMeta.Ivf, indexPath, "IVF index",
+        s"${corpusMemoIdentity(df)}|$nCentroids|$refineIters")(
+      s"fp=${datasetFingerprint(df, idCol)};lloyd=$refineIters;v=2")(
+      ivfBuild(df, vecCol, idCol, nCentroids, indexPath, refineIters))
 
   /** Test-only fault injection for the incremental-append commit path (same
     * contract as [[Dedup.crashHook]]): fired at "ann.meta-pre" /
-    * "ann.meta-tmp" / "ann.meta-moved" (inside [[writeMetaAtomic]]) and
+    * "ann.meta-tmp" / "ann.meta-moved" (inside [[IndexMeta.commit]]) and
     * "ann.appended" (after the parquet append in [[ivfAppend]] /
     * [[ivfPqAppend]]). The fuzzed invariant: a death at ANY point can never
-    * leave appended index rows under `appends=0` — the state where a later
-    * corpus-change staleness check would silently rebuild over them.
+    * leave appended index rows with no appends counted — the state where a
+    * later corpus-change staleness check would silently rebuild over them.
     */
   @volatile private[graft] var crashHook: String => Unit = _ => ()
 
@@ -610,23 +543,16 @@ object Similarity {
   @volatile private[graft] var capturePlans: Boolean = false
   @volatile private[graft] var lastAppendPlan: String = ""
 
-  /** Count of incremental appends recorded in an index meta's trailer
-    * lines; 0 when absent. One shared implementation across the dedup and
-    * ANN families ([[IndexMeta]]) so the corruption discipline — an
-    * unparseable value reads as Long.MaxValue, the refusing side — can
-    * never drift between them.
+  /** Parse an IVF-PQ index's persisted meta: (coarse cells, codebooks).
+    * The read-side twin of [[loadIvfCentroids]] — lets probes (and the
+    * dialect's SIMSEARCH) reopen a PQ index without re-deriving anything
+    * from the corpus.
     */
-  private def parseAppends(lines: java.util.List[String]): Long =
-    IndexMeta.parseAppends(lines)
-
-  private def saturatedBump(appends: Long): Long =
-    IndexMeta.saturatedBump(appends)
-
-  /** One `key=value` field of a meta header line ("fp=...;lloyd=2;v=2;n=16"). */
-  private def headerField(h0: String, name: String): Option[String] =
-    h0.split(';').collectFirst {
-      case f if f.startsWith(name + "=") => f.stripPrefix(name + "=")
-    }
+  def loadIvfPqMeta(indexPath: String)
+      : (Seq[(Int, Seq[Float])], Seq[Seq[Seq[Double]]]) =
+    IndexMeta.load(indexPath, IndexMeta.Pq,
+      s"no parseable IVF-PQ index meta at $indexPath — build the index " +
+        "first (ivfPqBuildIfMissing)")._2
 
   /** Reload an IVF index's frozen centroids from its persisted meta — the
     * probe-side entry for sessions (or the SIMSEARCH dialect surface) that
@@ -634,44 +560,10 @@ object Similarity {
     * driver-side file read; throws with guidance when the index has no
     * parseable meta (never built, or a half-compacted copy).
     */
-  /** Parse an IVF-PQ index's persisted meta (`_pq.txt`): (coarse cells,
-    * codebooks). The read-side twin of [[loadIvfCentroids]] — lets probes
-    * (and the dialect's SIMSEARCH) reopen a PQ index without re-deriving
-    * anything from the corpus. `appends=` trailer lines are ignored.
-    */
-  def loadIvfPqMeta(indexPath: String)
-      : (Seq[(Int, Seq[Float])], Seq[Seq[Seq[Double]]]) =
-    scala.util.Try {
-      val lines = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get(indexPath, "_pq.txt"))
-      val h0 = lines.get(0)
-      val nAct = headerField(h0, "n").get.toInt
-      val m = headerField(h0, "m").get.toInt
-      val k = headerField(h0, "k").get.toInt
-      val coarse = (0 until nAct).map { i =>
-        i -> lines.get(i + 1).split(",").toSeq.map(_.toFloat)
-      }
-      val books = (0 until m).map { s =>
-        (0 until k).map { j =>
-          lines.get(1 + nAct + s * k + j).split(",").toSeq.map(_.toDouble)
-        }
-      }
-      (coarse, books)
-    }.getOrElse(throw new IllegalStateException(
-      s"no parseable IVF-PQ index meta at $indexPath — build the index " +
-        "first (ivfPqBuildIfMissing)"))
-
   def loadIvfCentroids(indexPath: String): Seq[(Int, Seq[Float])] =
-    scala.util.Try {
-      val lines = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get(indexPath, "_centroids.txt"))
-      val nAct = headerField(lines.get(0), "n").get.toInt
-      (0 until nAct).map { i =>
-        i -> lines.get(i + 1).split(",").toSeq.map(_.toFloat)
-      }
-    }.getOrElse(throw new IllegalStateException(
+    IndexMeta.load(indexPath, IndexMeta.Ivf,
       s"no parseable IVF index meta at $indexPath — build the index first " +
-        "(ivfBuildIfMissing)"))
+        "(ivfBuildIfMissing)")._2
 
   // ---- incremental index maintenance -----------------------------------
   //
@@ -743,25 +635,20 @@ object Similarity {
     })
 
   private def appendIndexed(spark: org.apache.spark.sql.SparkSession,
-                            indexPath: String, metaPath: java.nio.file.Path,
-                            lines: java.util.List[String], bodyLen: Int,
-                            batch: DataFrame, idCol: Column,
+                            indexPath: String, fmt: IndexMeta.Format[_],
+                            lines: Seq[String], batch: DataFrame, idCol: Column,
                             indexIdCol: Column, dedupAgainstIndex: Boolean,
                             maxBroadcastIds: Long = 4000000L)
                            (encode: DataFrame => DataFrame): Long = {
-    import scala.jdk.CollectionConverters._
     val batchCanon = batch.queryExecution.analyzed.canonicalized
     val memoKey = inputSnapshotSig(batch).map(sig =>
-      (indexPath, lines.asScala.mkString("\n"), dedupAgainstIndex, sig))
+      (indexPath, lines.mkString("\n"), dedupAgainstIndex, sig))
     if (memoKey.exists(k => batchCanon == appendNoopMemo.get(k))) return 0L
-    // pin the index SNAPSHOT by explicit file list: Spark's
+    // pin the index SNAPSHOT by a driver-side file listing: Spark's
     // recache-on-write would otherwise re-plan the scan against the
-    // mutated index (same hazard as Dedup.exactIncremental)
-    val preFiles =
-      try spark.read.parquet(indexPath).inputFiles.toIndexedSeq
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => IndexedSeq.empty[String]
-      }
+    // mutated index (same hazard as Dedup.exactIncremental), and a
+    // path-based read lists and infers the schema in jobs of their own
+    val preFiles = IndexSnapshot.list(spark, indexPath)
     // intra-batch dedup: exactly one row per id survives (arbitrary but
     // single — ids are the identity; a duplicated id in one batch would
     // otherwise store BOTH rows, and no later probe or append could ever
@@ -769,33 +656,20 @@ object Similarity {
     val b1 = batch.withColumn("__gbid", idCol).dropDuplicates("__gbid")
       .drop("__gbid")
     val batchIds = b1.select(idCol.as("__bid")).distinct()
-    // two-tier sizing (see scaladoc): optimizer-stats shortcut bounds ROWS
-    // (rowCount when present, else decompressed-bytes/min-row-bytes with
-    // the same conservative constants as exactIncremental); ambiguous or
-    // large batches pay one persisted count of the compact id frame
-    val stats =
-      try Some(b1.queryExecution.optimizedPlan.stats)
-      catch { case _: Exception => None }
-    val estRows: BigInt = stats.flatMap(_.rowCount).getOrElse {
-      val estBytes = stats.map(s => BigInt(s.sizeInBytes.toString))
-        .getOrElse(BigInt(-1))
-      if (estBytes < 0) BigInt(-1)
-      else estBytes * 10 / 8
+    // two-tier sizing (see scaladoc): ambiguous or large batches pay one
+    // persisted count of the compact id frame
+    var counted: Option[DataFrame] = None
+    val small = IndexMeta.fitsBroadcast(b1, maxBroadcastIds) {
+      val p = batchIds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      counted = Some(p)
+      p.count()
     }
-    val smallByStats = maxBroadcastIds > 0 &&
-      estRows >= 0 && estRows <= BigInt(maxBroadcastIds)
-    val (bIds, small) =
-      if (smallByStats) (batchIds, true)
-      else if (maxBroadcastIds <= 0) (batchIds, false)
-      else {
-        val p = batchIds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (p, p.count() <= maxBroadcastIds)
-      }
+    val bIds = counted.getOrElse(batchIds)
     def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     val hits =
       if (preFiles.isEmpty || !dedupAgainstIndex)
         bIds.select(col("__bid").as("__iid")).limit(0)
-      else spark.read.parquet(preFiles: _*).select(indexIdCol.as("__iid"))
+      else IndexSnapshot.read(spark, preFiles).select(indexIdCol.as("__iid"))
         .join(maybeB(bIds), col("__iid") === col("__bid"), "left_semi")
         .distinct()
     val fresh = b1.join(maybeB(hits), idCol === col("__iid"), "left_anti")
@@ -811,10 +685,7 @@ object Similarity {
         memoKey.foreach(k => appendNoopMemo.put(k, batchCanon))
         return 0L
       }
-      val body = (0 until bodyLen).map(lines.get(_))
-      writeMetaAtomic(metaPath,
-        (body :+ s"appends=${saturatedBump(parseAppends(lines))}")
-          .mkString("\n"))
+      IndexMeta.bump(indexPath, fmt)
       encode(fresh)
         .repartition(col("__c")) // ≤ one appended file per touched cell
         .storeWrite.mode(org.apache.spark.sql.SaveMode.Append)
@@ -824,8 +695,8 @@ object Similarity {
     } finally {
       fresh.unpersist(blocking = false)
       // release the counted-path id cache (it served the path choice and
-      // the joins); smallByStats never persisted it
-      if (!smallByStats && maxBroadcastIds > 0) bIds.unpersist(blocking = false)
+      // the joins); the stats-proven path never persisted it
+      counted.foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -854,20 +725,11 @@ object Similarity {
                 batch: DataFrame, vecCol: Column, idCol: Column,
                 dedupAgainstIndex: Boolean = true,
                 maxBroadcastIds: Long = 4000000L): Long = {
-    val metaPath = java.nio.file.Paths.get(indexPath, "_centroids.txt")
-    val parsed = scala.util.Try {
-      val lines = java.nio.file.Files.readAllLines(metaPath)
-      val nAct = headerField(lines.get(0), "n").get.toInt
-      val centroids = (0 until nAct).map { i =>
-        i -> lines.get(i + 1).split(",").toSeq.map(_.toFloat)
-      }
-      (lines, nAct, centroids)
-    }.getOrElse(throw new IllegalStateException(
+    val (lines, centroids) = IndexMeta.load(indexPath, IndexMeta.Ivf,
       s"no parseable IVF index meta at $indexPath to append to — " +
-        "build the index first (ivfBuildIfMissing)"))
-    val (lines, nAct, centroids) = parsed
-    appendIndexed(spark, indexPath, metaPath, lines, nAct + 1, batch,
-      idCol, idCol, dedupAgainstIndex, maxBroadcastIds)(
+        "build the index first (ivfBuildIfMissing)")
+    appendIndexed(spark, indexPath, IndexMeta.Ivf, lines, batch, idCol, idCol,
+      dedupAgainstIndex, maxBroadcastIds)(
       fresh => ivfAssign(fresh, vecCol, centroids))
   }
 
@@ -880,31 +742,13 @@ object Similarity {
                   batch: DataFrame, vecCol: Column, idCol: Column,
                   dedupAgainstIndex: Boolean = true,
                   maxBroadcastIds: Long = 4000000L): Long = {
-    val metaPath = java.nio.file.Paths.get(indexPath, "_pq.txt")
-    val parsed = scala.util.Try {
-      val lines = java.nio.file.Files.readAllLines(metaPath)
-      val h0 = lines.get(0)
-      val nAct = headerField(h0, "n").get.toInt
-      val m = headerField(h0, "m").get.toInt
-      val k = headerField(h0, "k").get.toInt
-      val coarse = (0 until nAct).map { i =>
-        i -> lines.get(i + 1).split(",").toSeq.map(_.toFloat)
-      }
-      val books = (0 until m).map { s =>
-        (0 until k).map { j =>
-          lines.get(1 + nAct + s * k + j).split(",").toSeq.map(_.toDouble)
-        }
-      }
-      (lines, 1 + nAct + m * k, coarse, books)
-    }.getOrElse(throw new IllegalStateException(
+    val (lines, (coarse, books)) = IndexMeta.load(indexPath, IndexMeta.Pq,
       s"no parseable IVF-PQ index meta at $indexPath to append to — " +
-        "build the index first (ivfPqBuildIfMissing)"))
-    val (lines, bodyLen, coarse, books) = parsed
+        "build the index first (ivfPqBuildIfMissing)")
     // kept metadata columns (filtered-search attributes) ride along with
     // the appended rows exactly as at build time
-    val keep = headerField(parsed._1.get(0), "keep")
-      .map(_.split('|').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    appendIndexed(spark, indexPath, metaPath, lines, bodyLen, batch,
+    val keep = keptColumns(lines.head)
+    appendIndexed(spark, indexPath, IndexMeta.Pq, lines, batch,
       idCol, col("__id"), dedupAgainstIndex, maxBroadcastIds) { fresh =>
       ivfAssign(fresh.select(idCol.as("__id") +: vecCol.as("__v") +:
           keep.map(col): _*), col("__v"), coarse)
@@ -994,29 +838,22 @@ object Similarity {
     val pf = probedFraction(spark, indexPath, nProbe)
     if (pf <= scanBudget)
       return MaintainResult(pf, rebuilt = false, indexPath, stream)
-    val metaPath = java.nio.file.Paths.get(indexPath, "_centroids.txt")
-    if (!java.nio.file.Files.exists(metaPath))
+    val lines = IndexMeta.lines(indexPath, IndexMeta.Ivf).getOrElse(
       throw new IllegalStateException(
-        s"maintainIndex requires an IVF index (_centroids.txt) at $indexPath" +
-          " — a PQ index cannot re-cluster from its own codes")
-    val lines = java.nio.file.Files.readAllLines(metaPath)
-    val h0 = lines.get(0)
-    val nCentroids = headerField(h0, "n").get.toInt
-    val lloyd = headerField(h0, "lloyd").map(_.toInt).getOrElse(refineIters)
-    val appends = parseAppends(lines)
+        s"maintainIndex requires an IVF index (${IndexMeta.Ivf.file}) at " +
+          s"$indexPath — a PQ index cannot re-cluster from its own codes"))
+    val h0 = lines.head
+    val nCentroids = IndexMeta.field(h0, "n").get.toInt
+    val lloyd = IndexMeta.field(h0, "lloyd").map(_.toInt).getOrElse(refineIters)
+    val appends = IndexMeta.parseAppends(lines)
     // quiesce the single writer BEFORE reading the rebuild snapshot
     stream.foreach { q => q.stop(); q.awaitTermination() }
     val full = spark.read.parquet(indexPath).drop("__c")
     val centroids = ivfBuild(full, vecCol, idCol, nCentroids, destPath, lloyd)
     // self-describing dest, meta LAST (completion sentinel): fresh recipe
     // header over the rebuilt corpus + the carried appends counter
-    val recipe =
-      s"fp=${datasetFingerprint(full, idCol)};lloyd=$lloyd;v=2;n=${centroids.length}"
-    val body = (recipe +:
-      centroids.map(_._2.map(_.toString).mkString(","))) ++
-      (if (appends > 0) Seq(s"appends=$appends") else Nil)
-    writeMetaAtomic(java.nio.file.Paths.get(destPath, "_centroids.txt"),
-      body.mkString("\n"))
+    IndexMeta.commit(destPath, IndexMeta.Ivf, IndexMeta.Ivf.text(IndexMeta.Ivf.encode(
+      s"fp=${datasetFingerprint(full, idCol)};lloyd=$lloyd;v=2", centroids), appends))
     requireIndexComplete(destPath)
     val restarted = restart.map(f => f(destPath))
     MaintainResult(pf, rebuilt = true, destPath, restarted)
@@ -1045,34 +882,23 @@ object Similarity {
     val pf = probedFraction(spark, indexPath, nProbe)
     if (pf <= scanBudget)
       return MaintainResult(pf, rebuilt = false, indexPath, stream)
-    val metaPath = java.nio.file.Paths.get(indexPath, "_pq.txt")
-    if (!java.nio.file.Files.exists(metaPath))
+    val lines = IndexMeta.lines(indexPath, IndexMeta.Pq).getOrElse(
       throw new IllegalStateException(
-        s"maintainIndexPq requires an IVF-PQ index (_pq.txt) at $indexPath" +
-          " — use maintainIndex for a plain IVF index")
-    val lines = java.nio.file.Files.readAllLines(metaPath)
-    val h0 = lines.get(0)
-    val m = headerField(h0, "m").get.toInt
-    val k = headerField(h0, "k").get.toInt
-    val lloyd = headerField(h0, "lloyd").get.toInt
-    val pqIters = headerField(h0, "pq").get.toInt
-    val nCentroids = headerField(h0, "c").get.toInt
-    val keep = headerField(h0, "keep")
-      .map(_.split('|').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-    val appends = parseAppends(lines)
+        s"maintainIndexPq requires an IVF-PQ index (${IndexMeta.Pq.file}) at " +
+          s"$indexPath — use maintainIndex for a plain IVF index"))
+    val h0 = lines.head
+    def field(name: String) = IndexMeta.field(h0, name).get.toInt
+    val (m, k, lloyd, pqIters, nCentroids) =
+      (field("m"), field("k"), field("lloyd"), field("pq"), field("c"))
+    val keep = keptColumns(h0)
+    val appends = IndexMeta.parseAppends(lines)
     // quiesce the single writer BEFORE training on the rebuild snapshot
     stream.foreach { q => q.stop(); q.awaitTermination() }
-    val (coarse, books) = ivfPqBuild(sourceCorpus, vecCol, idCol,
+    val built = ivfPqBuild(sourceCorpus, vecCol, idCol,
       nCentroids, m, k, destPath, lloyd, pqIters, keep)
-    val keepTag = if (keep.isEmpty) "" else s"keep=${keep.mkString("|")};"
-    val recipe = s"fp=${datasetFingerprint(sourceCorpus, idCol)};m=$m;" +
-      s"k=$k;lloyd=$lloyd;pq=$pqIters;c=$nCentroids;${keepTag}v=2"
-    val body = (s"$recipe;n=${coarse.length}" +:
-      (coarse.map(_._2.map(_.toString).mkString(",")) ++
-        books.flatten.map(_.map(_.toString).mkString(",")))) ++
-      (if (appends > 0) Seq(s"appends=$appends") else Nil)
-    writeMetaAtomic(java.nio.file.Paths.get(destPath, "_pq.txt"),
-      body.mkString("\n"))
+    IndexMeta.commit(destPath, IndexMeta.Pq, IndexMeta.Pq.text(IndexMeta.Pq.encode(
+      pqRecipe(datasetFingerprint(sourceCorpus, idCol), m, k, lloyd, pqIters,
+        nCentroids, keep), built), appends))
     requireIndexComplete(destPath)
     val restarted = restart.map(f => f(destPath))
     MaintainResult(pf, rebuilt = true, destPath, restarted)
@@ -1102,27 +928,21 @@ object Similarity {
     */
   def indexCompactTo(spark: org.apache.spark.sql.SparkSession,
                      srcPath: String, destPath: String): Unit = {
-    val srcMeta = Seq("_centroids.txt", "_pq.txt")
-      .map(m => java.nio.file.Paths.get(srcPath, m))
-      .find(java.nio.file.Files.exists(_))
+    val fmt = Seq(IndexMeta.Ivf, IndexMeta.Pq).find(_.existsAt(srcPath))
       .getOrElse(throw new IllegalStateException(
-        s"ANN index at $srcPath has no meta (_centroids.txt/_pq.txt) — " +
-          "cannot produce a self-describing compacted copy"))
+        s"ANN index at $srcPath has no meta (${IndexMeta.Ivf.file}/" +
+          s"${IndexMeta.Pq.file}) — cannot produce a self-describing compacted copy"))
     // read the meta BEFORE the (long) data rewrite: the verbatim carry must
     // reflect the same snapshot the data read pinned
-    val metaBody = java.nio.file.Files.readString(srcMeta)
+    val meta = IndexMeta.carried(srcPath, fmt)
     val df = spark.read.parquet(srcPath)
     val cells = df.select(col("__c")).distinct().count().toInt
     df.repartition(math.max(cells, 1), col("__c"))
       .storeWrite.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("__c").parquet(destPath)
     crashHook("ann.compact-data")
-    // meta LAST (the completion sentinel), through the same crash-atomic
-    // tmp+move as every other meta commit — trailing newline trimmed like
-    // writeMetaAtomic's other callers produce, content otherwise verbatim
-    writeMetaAtomic(
-      java.nio.file.Paths.get(destPath, srcMeta.getFileName.toString),
-      metaBody.stripLineEnd)
+    // meta LAST (the completion sentinel), verbatim
+    IndexMeta.commit(destPath, fmt, meta)
     crashHook("ann.compact-done")
   }
 
@@ -1132,22 +952,8 @@ object Similarity {
     * deleted and re-compacted (the source is still intact — that is the
     * blue/green contract).
     */
-  def requireIndexComplete(indexPath: String): Unit = {
-    val dir = java.nio.file.Paths.get(indexPath)
-    if (!java.nio.file.Files.isDirectory(dir)) return
-    val hasMeta = Seq("_centroids.txt", "_pq.txt")
-      .exists(m => java.nio.file.Files.exists(dir.resolve(m)))
-    if (hasMeta) return
-    val hasData = {
-      val s = java.nio.file.Files.list(dir)
-      try s.anyMatch(p => p.getFileName.toString.startsWith("__c="))
-      finally s.close()
-    }
-    if (hasData) throw new IllegalStateException(
-      s"ANN index at $indexPath holds data but no meta — an incomplete " +
-        "compacted copy (or a foreign directory); delete it and re-compact " +
-        "from the intact source instead of flipping readers to it")
-  }
+  def requireIndexComplete(indexPath: String): Unit =
+    IndexMeta.requireComplete(indexPath, Seq(IndexMeta.Ivf, IndexMeta.Pq))
 
   private def cosLocal(a: Seq[Float], b: Seq[Float]): Double = {
     val d = a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
@@ -1418,90 +1224,39 @@ object Similarity {
     (coarse, books)
   }
 
-  private val ivfPqValidated = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String),
-    (Seq[(Int, Seq[Float])], Seq[Seq[Seq[Double]]])]()
-
   /** Fingerprint-guarded [[ivfPqBuild]] — same contract as
     * [[ivfBuildIfMissing]]: a cached index at the same path is reused only
-    * when the dataset fingerprint AND build recipe match.
+    * when the dataset fingerprint AND build recipe match. v2 of the recipe
+    * is exact decimal means + offset-encoded codes — a v1 index's stored
+    * bytes decode differently, so the version tag forces its rebuild. A
+    * changed `keep` column set changes the stored schema, so it is part of
+    * the recipe (absent entirely when empty, keeping pre-keep indexes
+    * valid).
     */
   def ivfPqBuildIfMissing(df: DataFrame, vecCol: Column, idCol: Column,
                           nCentroids: Int, m: Int, k: Int, indexPath: String,
                           refineIters: Int = 2, pqIters: Int = 2,
                           keep: Seq[String] = Nil)
-      : (Seq[(Int, Seq[Float])], Seq[Seq[Seq[Double]]]) = {
-    val memoKey = (indexPath, corpusMemoIdentity(df),
-      s"$nCentroids;$m;$k;$refineIters;$pqIters;${keep.mkString("|")}")
-    val hit = ivfPqValidated.get(memoKey)
-    if (hit != null) return hit
-    val metaPath = java.nio.file.Paths.get(indexPath, "_pq.txt")
-    // v2: exact decimal means + offset-encoded codes — a v1 index's stored
-    // bytes decode differently, so the version tag forces its rebuild. The
-    // actual coarse-cell count is persisted (a corpus smaller than
-    // nCentroids yields fewer cells; see ivfBuildIfMissing). Codebooks are
-    // always exactly m×k lines — pqTrain recycles seed rows to fill k.
-    // A changed `keep` column set changes the stored schema, so it is part
-    // of the recipe (absent entirely when empty, keeping pre-keep indexes
-    // valid).
+      : (Seq[(Int, Seq[Float])], Seq[Seq[Seq[Double]]]) =
+    IndexMeta.validateOrBuild(IndexMeta.Pq, indexPath, "IVF-PQ index",
+        s"${corpusMemoIdentity(df)}|$nCentroids;$m;$k;$refineIters;$pqIters;" +
+          keep.mkString("|"))(
+      pqRecipe(datasetFingerprint(df, idCol), m, k, refineIters, pqIters,
+        nCentroids, keep))(
+      ivfPqBuild(df, vecCol, idCol, nCentroids, m, k, indexPath, refineIters,
+        pqIters, keep))
+
+  /** The build recipe an IVF-PQ meta header records (see [[IndexMeta.Pq]]). */
+  private def pqRecipe(fp: String, m: Int, k: Int, lloyd: Int, pqIters: Int,
+                       nCentroids: Int, keep: Seq[String]): String = {
     val keepTag = if (keep.isEmpty) "" else s"keep=${keep.mkString("|")};"
-    val recipe = s"fp=${datasetFingerprint(df, idCol)};m=$m;k=$k;" +
-      s"lloyd=$refineIters;pq=$pqIters;c=$nCentroids;${keepTag}v=2"
-    // unparseable meta reads as STALE (rebuild), never as an exception —
-    // same contract as ivfBuildIfMissing, including its appended-history
-    // refusal below
-    val metaLines =
-      if (!java.nio.file.Files.exists(metaPath)) None
-      else scala.util.Try(java.nio.file.Files.readAllLines(metaPath)).toOption
-    val reused = metaLines.flatMap { lines =>
-      scala.util.Try {
-        val h0 = if (lines.isEmpty) "" else lines.get(0)
-        if (!h0.startsWith(recipe + ";n=")) None
-        else {
-          val nAct = h0.stripPrefix(recipe + ";n=").toInt
-          // body = coarse + codebook lines; `appends=` trailer lines may
-          // follow after an [[ivfPqAppend]]
-          val body = 1 + nAct + m * k
-          if (lines.size() < body ||
-              (body until lines.size())
-                .exists(i => !lines.get(i).trim.startsWith("appends="))) None
-          else {
-            val coarse = (0 until nAct).map { i =>
-              i -> lines.get(i + 1).split(",").toSeq.map(_.toFloat)
-            }
-            val books = (0 until m).map { s =>
-              (0 until k).map { j =>
-                lines.get(1 + nAct + s * k + j)
-                  .split(",").toSeq.map(_.toDouble)
-              }
-            }
-            Some((coarse, books))
-          }
-        }
-      }.toOption.flatten
-    }
-    reused match {
-      case Some(loaded) =>
-        ivfPqValidated.put(memoKey, loaded)
-        return loaded
-      case None =>
-        val appends = metaLines.map(parseAppends).getOrElse(0L)
-        if (appends > 0)
-          throw new IllegalStateException(
-            s"IVF-PQ index at $indexPath holds $appends incremental " +
-              "append(s) that a corpus-change rebuild would silently " +
-              "discard; delete the index directory explicitly to rebuild " +
-              "from scratch")
-    }
-    val built = ivfPqBuild(df, vecCol, idCol, nCentroids, m, k, indexPath,
-      refineIters, pqIters, keep)
-    val body = (s"$recipe;n=${built._1.length}" +:
-      (built._1.map(_._2.map(_.toString).mkString(",")) ++
-        built._2.flatten.map(_.map(_.toString).mkString(",")))).mkString("\n")
-    writeMetaAtomic(metaPath, body)
-    ivfPqValidated.put(memoKey, built)
-    built
+    s"fp=$fp;m=$m;k=$k;lloyd=$lloyd;pq=$pqIters;c=$nCentroids;${keepTag}v=2"
   }
+
+  /** The kept metadata columns an IVF-PQ meta header records. */
+  private def keptColumns(header: String): Seq[String] =
+    IndexMeta.field(header, "keep").map(_.split('|').toSeq.filter(_.nonEmpty))
+      .getOrElse(Nil)
 
   /** Batched ANN over an IVF-PQ index: top-k corpus neighbors for EVERY
     * query row in one pass over the CODES — [[ivfTopKBatch]]'s retrieval

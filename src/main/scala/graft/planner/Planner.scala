@@ -56,8 +56,7 @@ final class Planner(catalog: Catalog, now: () => Long = () => System.currentTime
         // the index kind comes from its OWN meta: _pq.txt = IVF-PQ (codes
         // probe + optional exact re-rank against the registered base
         // table), _centroids.txt = plain IVF
-        val isPq = java.nio.file.Files
-          .exists(java.nio.file.Paths.get(idx.path, "_pq.txt"))
+        val isPq = graft.pipeline.IndexMeta.Pq.existsAt(idx.path)
         // the WHERE compiles against the INDEX's stored columns (the
         // filtered-ANN attribute set); unknown columns error at analysis,
         // which is the right failure for a typo'd attribute. IN-subqueries

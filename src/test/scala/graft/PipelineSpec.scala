@@ -531,6 +531,47 @@ class PipelineSpec extends AnyFunSuite with TestSession {
     assert(c2 != c1 || ids.contains(59L))
   }
 
+  /** Two corpora with disjoint ids: d1 holds ids 0..39, d2 ids 1000..1049. */
+  private def swapCorpora(seed: Int): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(seed)
+    def mkDf(lo: Long, n: Long) = (lo until lo + n).map { i =>
+      (i, Array.fill(8)(rnd.nextGaussian().toFloat).toSeq)
+    }.toDF("vec_id", "embedding")
+    (mkDf(0L, 40L), mkDf(1000L, 50L))
+  }
+
+  private def indexIds(idx: String, idCol: String): Set[Long] =
+    spark.read.parquet(idx).select(idCol).collect().map(_.getLong(0)).toSet
+
+  test("IVF validation memo: corpus d1 -> d2 -> d1 rebuilds d1, not a stale hit") {
+    val (d1, d2) = swapCorpora(17)
+    val idx = java.nio.file.Files.createTempDirectory("ivf-swap").toString + "/i"
+    def build(d: DataFrame) =
+      Similarity.ivfBuildIfMissing(d, col("embedding"), col("vec_id"), 4, idx)
+    build(d1)
+    build(d2)
+    // the third call must not return d1's memoized centroids while d2's
+    // index sits on disk
+    val c = build(d1)
+    assert(indexIds(idx, "vec_id") === (0L until 40L).toSet, "the index must hold d1's ids")
+    assert(c === Similarity.loadIvfCentroids(idx),
+      "returned centroids must be the ones the on-disk meta records")
+  }
+
+  test("IVF-PQ validation memo: corpus d1 -> d2 -> d1 rebuilds d1, not a stale hit") {
+    val (d1, d2) = swapCorpora(19)
+    val idx = java.nio.file.Files.createTempDirectory("pq-swap").toString + "/i"
+    def build(d: DataFrame) = Similarity.ivfPqBuildIfMissing(d, col("embedding"),
+      col("vec_id"), nCentroids = 4, m = 4, k = 8, idx)
+    build(d1)
+    build(d2)
+    val cb = build(d1)
+    assert(indexIds(idx, "__id") === (0L until 40L).toSet, "the index must hold d1's ids")
+    assert(cb === Similarity.loadIvfPqMeta(idx),
+      "returned centroids and codebooks must be the ones the on-disk meta records")
+  }
+
   test("corrupt/truncated index meta reads as stale: rebuild, never a bricked path") {
     import spark.implicits._
     val rnd = new scala.util.Random(29)
@@ -3998,5 +4039,61 @@ class PipelineSpec extends AnyFunSuite with TestSession {
       assert(ids(admit(batch, twin, 0L)) === first,
         s"$name: the shuffle fallback must return the small path's survivors")
     }
+  }
+
+  /** (description, SQL execution id, stage names) of every job `body` runs. */
+  private def jobsDuring(body: => Unit): Seq[(String, String, String)] = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).getOrElse("")
+        jobs.add((prop("spark.job.description"), prop("spark.sql.execution.id"),
+          j.stageInfos.map(_.name).mkString(";")))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // listener delivery is async: wait until the count is stable
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(150)
+        val now = jobs.size
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
+
+  test("ANN appends launch no listing or schema-inference job over a many-cell index") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(23)
+    def vecs(lo: Long, n: Int) = (lo until lo + n).map { i =>
+      (i, Array.fill(4)(rnd.nextGaussian().toFloat).toSeq)
+    }.toDF("vec_id", "embedding")
+    val idx = java.nio.file.Files.createTempDirectory("ann-append-jobs").toString + "/i"
+    Similarity.ivfBuildIfMissing(vecs(0L, 400), col("embedding"), col("vec_id"), 48, idx)
+    val cells = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(idx))
+      try s.filter(_.getFileName.toString.startsWith("__c=")).count() finally s.close()
+    }
+    assert(cells > 32, s"the index must exceed the parallel-listing threshold: $cells cells")
+    var appended = -1L
+    val jobs = jobsDuring {
+      appended = Similarity.ivfAppend(spark, idx, vecs(1000L, 5),
+        col("embedding"), col("vec_id"))
+    }
+    assert(appended === 5L)
+    val listing = jobs.filter(_._1.startsWith("Listing leaf files"))
+    // schema inference runs outside any SQL execution, from the reader
+    // (call site `parquet at …`), and carries no description
+    val inference = jobs.filter(j => j._1.isEmpty && j._2.isEmpty &&
+      j._3.startsWith("parquet at"))
+    assert(listing.isEmpty && inference.isEmpty,
+      s"ivfAppend launched ${listing.size} listing and ${inference.size} " +
+        s"schema-inference jobs: ${(listing ++ inference).map(_._3)}")
   }
 }

@@ -197,4 +197,78 @@ class SnapshotSpec extends AnyFunSuite with TestSession {
     assert(stats() === Map(1L -> 4L, 2L -> 0L, 3L -> 4L),
       "the rerun must count the grams of the grown listing, not the cached old ones")
   }
+
+  private def docIds(dir: String): Set[Long] =
+    spark.read.parquet(dir).select("id").collect().map(_.getLong(0)).toSet
+
+  test("containment build: a grown corpus dir rebuilds from the new listing, not cached signatures") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("snap-cn-build").toString
+    val idx = base + "/i"
+    val cdir = base + "/corpus"
+    Seq((1L, "alpha bravo charlie delta echo foxtrot"),
+        (2L, "golf hotel india juliet kilo lima"))
+      .toDF("doc_id", "text").write.parquet(cdir)
+    def build(): Unit = Dedup.buildContainmentIndexIfMissing(spark.read.parquet(cdir),
+      col("text"), col("doc_id"), idx, n = 2, numProbes = 8)
+    build()
+    assert(docIds(idx + "/docs") === Set(1L, 2L))
+    // the grown corpus has a new fingerprint, so the index is rebuilt; the
+    // rebuild must write the grown corpus, or the meta records a corpus the
+    // index does not hold
+    growExternally(cdir, Seq((3L, "mike november oscar papa quebec romeo"))
+      .toDF("doc_id", "text"))
+    build()
+    assert(docIds(idx + "/docs") === Set(1L, 2L, 3L),
+      "the rebuild must index the grown listing, not the cached signatures")
+  }
+
+  test("containment compaction: a source grown outside the session compacts its new docs") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("snap-cn-compact").toString
+    val src = base + "/src"
+    Dedup.buildContainmentIndexIfMissing(
+      Seq((1L, "alpha bravo charlie delta echo foxtrot"),
+          (2L, "golf hotel india juliet kilo lima")).toDF("doc_id", "text"),
+      col("text"), col("doc_id"), src, n = 2, numProbes = 8)
+    Dedup.containmentIndexCompactTo(spark, src, base + "/dest1")
+    assert(docIds(base + "/dest1/docs") === Set(1L, 2L))
+    // a doc row file lands in the source's docs/ from outside the session
+    val other = base + "/other"
+    Dedup.buildContainmentIndex(
+      Seq((3L, "mike november oscar papa quebec romeo")).toDF("doc_id", "text"),
+      col("text"), col("doc_id"), other, n = 2, numProbes = 8)
+    val part = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(other, "docs"))
+      try s.filter(_.getFileName.toString.endsWith(".parquet")).findFirst.orElseThrow()
+      finally s.close()
+    }
+    val destDir = java.nio.file.Paths.get(src, "docs", part.getParent.getFileName.toString)
+    java.nio.file.Files.createDirectories(destDir)
+    java.nio.file.Files.move(part,
+      destDir.resolve(s"part-external-${System.nanoTime()}.parquet"))
+    Dedup.containmentIndexCompactTo(spark, src, base + "/dest2")
+    assert(docIds(base + "/dest2/docs") === Set(1L, 2L, 3L),
+      "the second compaction must read the grown docs/, not the cached first read")
+  }
+
+  test("containmentLsh: a grown corpus dir is re-tokenized, not served cached shingles") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("snap-cn-lsh").toString
+    val cdir = base + "/corpus"
+    Seq((1L, "alpha bravo charlie delta echo foxtrot golf hotel"),
+        (2L, "india juliet kilo lima mike november oscar papa"))
+      .toDF("doc_id", "text").write.parquet(cdir)
+    def pairs(): Set[(Long, Long)] =
+      Dedup.containmentLsh(spark.read.parquet(cdir), col("text"), col("doc_id"),
+          n = 2, threshold = 0.9)
+        .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs() === Set.empty[(Long, Long)])
+    // doc 3 quotes doc 1 whole
+    growExternally(cdir,
+      Seq((3L, "alpha bravo charlie delta echo foxtrot golf hotel quebec"))
+        .toDF("doc_id", "text"))
+    assert(pairs() === Set((1L, 3L)),
+      "the rerun must shingle the grown listing, not the cached old tokens")
+  }
 }
