@@ -1,5 +1,6 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit, TimeoutException}
 import org.apache.spark.sql.{DataFrame, Row}
 
 /** Facade: zenodb-dialect SQL string → DataFrame over a catalog of tables.
@@ -8,7 +9,14 @@ import org.apache.spark.sql.{DataFrame, Row}
 object Engine {
   def sql(catalog: Catalog, query: String,
           now: () => Long = () => System.currentTimeMillis()): DataFrame =
-    new planner.Planner(catalog, now).plan(sqlx.Parser.parse(query))
+    plan(catalog, sqlx.Parser.parse(query), now)
+
+  /** Plans an already-parsed query, so a caller that parsed it need not
+    * parse it again.
+    */
+  private[graft] def plan(catalog: Catalog, query: sqlx.Query,
+      now: () => Long = () => System.currentTimeMillis()): DataFrame =
+    new planner.Planner(catalog, now).plan(query)
 
   /** Execution stats returned alongside rows — the analogue of the
     * reference's common.QueryStats (common/common.go:57-64), which a cluster
@@ -17,60 +25,78 @@ object Engine {
     * expiry, so completeness is boolean rather than per-partition:
     * `completed` = every task finished before the deadline; an expired
     * query yields zero rows with `completed = false` instead of silently
-    * partial data.
+    * partial data. `elapsedMs` runs from the parse to the end of delivery.
     */
-  final case class QueryStats(elapsedMs: Long, rows: Long, completed: Boolean)
-  final case class QueryResult(rows: Array[Row], stats: QueryStats)
+  final case class QueryStats(elapsedMs: Long, rows: Long, completed: Boolean) {
+    /** The one wire form: HTTP's `stats` object and RPC's END frame body. */
+    def toJson: String =
+      s"""{"elapsedMs":$elapsedMs,"rows":$rows,"completed":$completed}"""
+  }
+  final case class QueryResult(rows: Array[Row], stats: QueryStats) {
+    /** The rows; an expired deadline raises TimeoutException. */
+    def completedRows(query: String, timeoutMs: Long): Array[Row] =
+      if (stats.completed) rows
+      else throw new TimeoutException(s"query exceeded ${timeoutMs}ms: $query")
+  }
 
-  /** Execute with a deadline — the reference runs every query under a
-    * context deadline that the operators propagate (core/core_test.go
-    * deadline tests; 1h cluster default, zenodb.go:39). Spark's analogue:
-    * the collecting thread owns a dedicated job group with
+  /** Runs `consume` over a planned frame, timed from `t0` (a `nanoTime`
+    * taken before the parse); `consume` returns its value and the number of
+    * rows it delivered. With a deadline — the reference runs every query
+    * under a context deadline that the operators propagate
+    * (core/core_test.go deadline tests; 1h cluster default, zenodb.go:39) —
+    * `consume` runs on its own thread in a dedicated job group with
     * interruptOnCancel, and expiry cancels the group, so running TASKS are
-    * interrupted cluster-wide rather than orphaned. Never throws on expiry —
-    * the result reports `stats.completed = false` (use [[sqlTimed]] for the
-    * strict throw-on-expiry form).
+    * interrupted cluster-wide rather than orphaned. Never throws on expiry:
+    * the value is None and the stats read zero rows, `completed = false`.
+    */
+  private[graft] def run[T](df: DataFrame, label: String,
+      timeoutMs: Option[Long], t0: Long)(
+      consume: DataFrame => (T, Long)): (Option[T], QueryStats) = {
+    val out = timeoutMs.fold(Option(consume(df))) { ms =>
+      val sc = df.sparkSession.sparkContext
+      val group = s"graft-deadline-${java.util.UUID.randomUUID()}"
+      val pool = Executors.newSingleThreadExecutor()
+      try {
+        val fut = pool.submit(new Callable[(T, Long)] {
+          def call(): (T, Long) = {
+            sc.setJobGroup(group, label, interruptOnCancel = true)
+            try consume(df) finally sc.clearJobGroup()
+          }
+        })
+        try Some(fut.get(ms, TimeUnit.MILLISECONDS))
+        catch {
+          case _: TimeoutException =>
+            sc.cancelJobGroup(group); fut.cancel(true); None
+          case e: ExecutionException => throw e.getCause
+        }
+      } finally pool.shutdown()
+    }
+    val elapsedMs = (System.nanoTime() - t0) / 1000000L
+    (out.map(_._1), QueryStats(elapsedMs, out.fold(0L)(_._2), out.isDefined))
+  }
+
+  /** The collecting consumer of the `sqlWithStats` forms. */
+  private[graft] def collectRows(df: DataFrame): (Array[Row], Long) = {
+    val rows = df.collect()
+    (rows, rows.length.toLong)
+  }
+
+  /** Execute with a deadline ([[run]] collecting the rows). Never throws on
+    * expiry — the result reports `stats.completed = false` (use
+    * [[sqlTimed]] for the strict throw-on-expiry form).
     */
   def sqlWithStats(catalog: Catalog, query: String, timeoutMs: Long,
                    now: () => Long = () => System.currentTimeMillis()): QueryResult = {
-    val df = sql(catalog, query, now)
-    val sc = df.sparkSession.sparkContext
-    val group = s"graft-deadline-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
     val t0 = System.nanoTime()
-    def elapsedMs: Long = (System.nanoTime() - t0) / 1000000L
-    try {
-      val fut = pool.submit(new java.util.concurrent.Callable[Array[Row]] {
-        def call(): Array[Row] = {
-          sc.setJobGroup(group, query, interruptOnCancel = true)
-          try df.collect()
-          finally sc.clearJobGroup()
-        }
-      })
-      try {
-        val rows = fut.get(timeoutMs, java.util.concurrent.TimeUnit.MILLISECONDS)
-        QueryResult(rows, QueryStats(elapsedMs, rows.length.toLong, completed = true))
-      } catch {
-        case _: java.util.concurrent.TimeoutException =>
-          sc.cancelJobGroup(group)
-          fut.cancel(true)
-          QueryResult(Array.empty[Row],
-            QueryStats(elapsedMs, 0L, completed = false))
-        case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause
-      }
-    } finally pool.shutdown()
+    val (rows, stats) =
+      run(sql(catalog, query, now), query, Some(timeoutMs), t0)(collectRows)
+    QueryResult(rows.getOrElse(Array.empty[Row]), stats)
   }
 
   /** Strict deadline form: expiry raises TimeoutException (the pre-stats
     * behavior; some callers prefer fail-fast to an empty result).
     */
   def sqlTimed(catalog: Catalog, query: String, timeoutMs: Long,
-               now: () => Long = () => System.currentTimeMillis()): Array[Row] = {
-    val res = sqlWithStats(catalog, query, timeoutMs, now)
-    if (!res.stats.completed)
-      throw new java.util.concurrent.TimeoutException(
-        s"query exceeded ${timeoutMs}ms: $query")
-    res.rows
-  }
+               now: () => Long = () => System.currentTimeMillis()): Array[Row] =
+    sqlWithStats(catalog, query, timeoutMs, now).completedRows(query, timeoutMs)
 }

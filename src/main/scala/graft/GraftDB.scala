@@ -36,14 +36,9 @@ final class GraftDB(
   // Sizing the job to the cluster instead (one task per core, each listing
   // a CHUNK of dirs) cuts the cold relation build to ~0.3 s and behaves
   // the same on a real cluster, where defaultParallelism is the fleet's
-  // core count. `-Dgraft.discoveryParallelism=` overrides; 0 leaves
-  // Spark's default untouched.
-  locally {
-    val p = Integer.getInteger("graft.discoveryParallelism",
-      spark.sparkContext.defaultParallelism).intValue()
-    if (p > 0) spark.conf.set(
-      "spark.sql.sources.parallelPartitionDiscovery.parallelism", p.toString)
-  }
+  // core count.
+  spark.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+    spark.sparkContext.defaultParallelism.toString)
 
   /** Parse a schema text into per-table resolved definitions; views resolve
     * to their parent's stream and are materialized independently
@@ -675,22 +670,6 @@ final class GraftDB(
           baseTable, refineK)
     }
 
-  /** Per-query entry work shared by [[sql]]/[[sqlTimed]]/[[sqlWithStats]].
-    *
-    * `-- force_fresh` (sql/sql.go:279-283): drain attached streams so the
-    * query sees every point delivered so far (≅ includeMemStore reads) —
-    * BOTH the table-merge streams and any enrolled index-maintenance
-    * streams (a SIMSEARCH after force_fresh must see every vector already
-    * delivered to an attached AnnIndexStream, the same contract).
-    *
-    * Every maintained ANN index the query's SIMSEARCH calls reference
-    * (including inside FROM- and IN-subqueries) gets a reader lease on its
-    * CURRENT path: a concurrent maintenance flip then cannot GC the
-    * generation this query resolved until the lease is released — the
-    * reference's "unless an iteration holds them" retention
-    * (/root/reference/row_store.go:681-725). Returns the leases; the
-    * caller releases them when done with the index files.
-    */
   /** Drain every attached stream's delivered-but-unprocessed data into
     * the queryable state: table-merge streams AND enrolled
     * index-maintenance streams. This is the reference's `DB.FlushAll`
@@ -707,7 +686,23 @@ final class GraftDB(
       .foreach(_.processAllAvailable())
   }
 
-  private def preQuery(query: String): (Seq[AutoCloseable], Catalog) = {
+  /** Per-query entry work of [[sql]] and [[runQuery]]; parses once.
+    *
+    * `-- force_fresh` (sql/sql.go:279-283): drain attached streams so the
+    * query sees every point delivered so far (≅ includeMemStore reads) —
+    * BOTH the table-merge streams and any enrolled index-maintenance
+    * streams (a SIMSEARCH after force_fresh must see every vector already
+    * delivered to an attached AnnIndexStream, the same contract).
+    *
+    * Every maintained ANN index the query's SIMSEARCH calls reference
+    * (including inside FROM- and IN-subqueries) gets a reader lease on its
+    * CURRENT path: a concurrent maintenance flip then cannot GC the
+    * generation this query resolved until the lease is released — the
+    * reference's "unless an iteration holds them" retention
+    * (row_store.go:681-725). Returns the parse, the leases (the caller
+    * releases them when done) and the catalog.
+    */
+  private def preQuery(query: String): (Query, Seq[AutoCloseable], Catalog) = {
     val parsed = Parser.parse(query)
     if (parsed.forceFresh) flushAll()
     sweepExpiredLeases()
@@ -719,7 +714,7 @@ final class GraftDB(
     val annSnap = annIndexes.synchronized { annIndexes.toMap }
     val pins = names.toSeq.flatMap(annSnap.get).map(_.path).map(pinPath)
     queryHook(query)
-    (pins, catalogWith(annSnap))
+    (parsed, pins, catalogWith(annSnap))
   }
 
   /** ANN index names referenced by the query's SIMSEARCH table functions,
@@ -749,9 +744,9 @@ final class GraftDB(
   @volatile private[graft] var queryHook: String => Unit = _ => ()
 
   def sql(query: String): DataFrame = {
-    val (pins, cat) = preQuery(query)
+    val (parsed, pins, cat) = preQuery(query)
     val df =
-      try rethrowIfGcLoss(Engine.sql(cat, query, now))
+      try rethrowIfGcLoss(Engine.plan(cat, parsed, now))
       catch { case e: Throwable => pins.foreach(_.close()); throw e }
     if (pins.nonEmpty) transferLeasesToExecution(df, pins)
     df
@@ -2048,14 +2043,25 @@ final class GraftDB(
 
   private val closedFlag = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** [[sql]] executed under a deadline ([[Engine.sqlTimed]]): expiry cancels
-    * the query's job group and raises TimeoutException.
+  /** The one query-run path of [[sqlTimed]], [[sqlWithStats]], HTTP `/run`
+    * and RPC `QUERY`: parses once, holds the SIMSEARCH leases while
+    * `consume` runs over the planned frame under [[Engine.run]], and
+    * releases them when it returns.
     */
-  def sqlTimed(query: String, timeoutMs: Long): Array[org.apache.spark.sql.Row] = {
-    val (pins, cat) = preQuery(query)
-    try rethrowIfGcLoss(Engine.sqlTimed(cat, query, timeoutMs, now))
+  private[graft] def runQuery[T](query: String, timeoutMs: Option[Long] = None)(
+      consume: DataFrame => (T, Long)): (Option[T], Engine.QueryStats) = {
+    val t0 = System.nanoTime()
+    val (parsed, pins, cat) = preQuery(query)
+    try rethrowIfGcLoss(
+      Engine.run(Engine.plan(cat, parsed, now), query, timeoutMs, t0)(consume))
     finally pins.foreach(_.close())
   }
+
+  /** [[sql]] executed under a deadline: expiry cancels the query's job
+    * group and raises TimeoutException.
+    */
+  def sqlTimed(query: String, timeoutMs: Long): Array[org.apache.spark.sql.Row] =
+    sqlWithStats(query, timeoutMs).completedRows(query, timeoutMs)
 
   /** Deadline form that never throws on expiry: returns rows plus
     * [[Engine.QueryStats]] with `completed = false` when the deadline
@@ -2063,9 +2069,8 @@ final class GraftDB(
     * common/common.go:57-64).
     */
   def sqlWithStats(query: String, timeoutMs: Long): Engine.QueryResult = {
-    val (pins, cat) = preQuery(query)
-    try rethrowIfGcLoss(Engine.sqlWithStats(cat, query, timeoutMs, now))
-    finally pins.foreach(_.close())
+    val (rows, stats) = runQuery(query, Some(timeoutMs))(Engine.collectRows)
+    Engine.QueryResult(rows.getOrElse(Array.empty), stats)
   }
 }
 
@@ -2110,13 +2115,11 @@ object GraftDB {
   def virtualClock(): VirtualClock = new VirtualClock
 
   /** Follow-journal replay horizon: max entries / bytes kept per stream
-    * (`-Dgraft.followJournalMaxEntries=` / `-Dgraft.followJournalMaxBytes=`
-    * override).
+    * (`-Dgraft.followJournalMaxEntries=` overrides the entry count).
     */
   def FollowJournalMaxEntries: Int =
     Integer.getInteger("graft.followJournalMaxEntries", 1024)
-  def FollowJournalMaxBytes: Long =
-    java.lang.Long.getLong("graft.followJournalMaxBytes", 256L << 20)
+  val FollowJournalMaxBytes: Long = 256L << 20
 
   /** Stamp file marking a journal entry whose append FAILED: the marker is
     * published (density) but the batch's points never reached the feed. The

@@ -3,8 +3,8 @@ package graft.server
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import com.sun.net.httpserver.{HttpExchange, HttpServer => JdkHttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, struct, to_json}
 import graft.GraftDB
 
 /** HTTP surface parity with the reference's web handler
@@ -15,9 +15,9 @@ import graft.GraftDB
   *    (web/insert.go:22-47). Parsed by Spark's JSON reader, dims/vals
   *    flattened to columns, routed through [[GraftDB.insert]].
   *  - `GET/POST /run` — zenodb-dialect SQL (query param `sql` or body);
-  *    responds with JSON rows plus approximate per-column cardinalities
-  *    (the reference attaches HLL estimates, web/query.go:303-327 — here
-  *    `approx_count_distinct`).
+  *    responds with JSON rows plus per-column cardinalities, exact counts
+  *    of distinct non-null values over the returned rows (the reference
+  *    attaches HLL estimates, web/query.go:303-327).
   *
   * Built on the JDK server: zero extra dependencies, good enough for an
   * embedded control plane (the data plane is Spark itself).
@@ -147,7 +147,7 @@ final class HttpServer(spark: SparkSession, db: GraftDB, port: Int,
     // entry's permalink immediately; `/cached/{permalink}` polls it.
     server.createContext("/async", (ex: HttpExchange) => handle(ex) {
       // the deadline rides along: an async query with `timeout=` caps the
-      // background run exactly like /run (partial result, completed=false)
+      // background run exactly like /run (no rows, completed=false)
       asyncQuery(sqlOf(ex), timeoutOf(ex))
     })
     server.createContext("/cached/", (ex: HttpExchange) => handle(ex) {
@@ -274,79 +274,49 @@ final class HttpServer(spark: SparkSession, db: GraftDB, port: Int,
   def insertJsonLines(stream: String, jsonLines: String): Long =
     PointsJson.insert(spark, db, stream, jsonLines)
 
-  /** Run dialect SQL, return rows + per-column approximate cardinalities +
-    * a `stats` object (elapsedMs, rows, completed — the reference's
-    * QueryStats analogue, common/common.go:57-64). Rows stream through the
-    * local iterator partition by partition (no whole-result collect),
-    * truncated at [[HttpServer.MaxRows]] with a `truncated` marker — this
-    * is a control-plane endpoint, not a data path.
+  /** Run dialect SQL through [[GraftDB.runQuery]]; return rows, per-column
+    * cardinalities and a `stats` object (elapsedMs, rows, completed — the
+    * reference's QueryStats analogue, common/common.go:57-64). One bounded
+    * collect (`limit(MaxRows + 1)`) brings back each row's JSON beside its
+    * column values, truncated at [[HttpServer.MaxRows]] with a `truncated`
+    * marker — this is a control-plane endpoint, not a data path. The
+    * cardinalities are exact counts of distinct non-null values per column
+    * over the returned rows (the reference keeps HLL estimates per field
+    * as rows stream past, web/query.go:303-327).
     *
     * With `timeoutMs` set, expiry cancels the query's job group and the
-    * response carries the rows gathered so far with
-    * `stats.completed = false` — the reference's partial-results-on-deadline
-    * behavior (cluster_query.go:317-330).
+    * response carries zero rows with `stats.completed = false` and
+    * `truncated = true`, like [[GraftDB.sqlWithStats]].
     */
   def runToJson(sql: String, timeoutMs: Option[Long] = None): String = {
-    val df = db.sql(sql)
-    val t0 = System.nanoTime()
-    val parts = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    @volatile var truncated = false
-    @volatile var completed = true
-    def drain(): Unit = {
-      val it = df.toJSON.toLocalIterator()
-      var n = 0
-      while (it.hasNext && n < HttpServer.MaxRows) { parts.add(it.next()); n += 1 }
-      truncated = it.hasNext
+    val (res, stats) = db.runQuery(sql, timeoutMs) { df =>
+      val got = df.select(to_json(struct(col("*"))), col("*"))
+        .limit(HttpServer.MaxRows + 1).collect()
+      val rows = got.take(HttpServer.MaxRows)
+      ((df.columns, rows, got.length > rows.length), rows.length.toLong)
     }
-    timeoutMs match {
-      case None => drain()
-      case Some(ms) =>
-        val sc = spark.sparkContext
-        val group = s"graft-run-${java.util.UUID.randomUUID()}"
-        val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-        try {
-          val fut = pool.submit(new Runnable {
-            def run(): Unit = {
-              sc.setJobGroup(group, sql, interruptOnCancel = true)
-              try drain() finally sc.clearJobGroup()
-            }
-          }, ())
-          try fut.get(ms, java.util.concurrent.TimeUnit.MILLISECONDS)
-          catch {
-            case _: java.util.concurrent.TimeoutException =>
-              sc.cancelJobGroup(group)
-              fut.cancel(true)
-              // cancel is asynchronous: give the drain thread a short,
-              // bounded grace to die so in-flight rows land before the
-              // snapshot. Consistency does NOT depend on this wait — the
-              // single snapshot below feeds both the rows array and
-              // stats.rows — so a thread stuck in non-interruptible IO only
-              // costs rows, not correctness, and the response stays prompt
-              // instead of stretching a 300ms deadline to 30s.
-              pool.shutdownNow()
-              pool.awaitTermination(2, java.util.concurrent.TimeUnit.SECONDS)
-              completed = false
-              truncated = true // the deadline cut the result short
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        } finally pool.shutdown()
+    res match {
+      case Some((cols, rows, truncated)) =>
+        val cards = cols.indices.map { i =>
+          val seen = new java.util.HashSet[Any]()
+          rows.foreach(r => if (!r.isNullAt(i + 1)) seen.add(distinctKey(r.get(i + 1))))
+          s"${jsonStr(cols(i))}:${seen.size}"
+        }.mkString("{", ",", "}")
+        s"""{"rows":${rows.map(_.getString(0)).mkString("[", ",", "]")},""" +
+          s""""cardinalities":$cards,"truncated":$truncated,"stats":${stats.toJson}}"""
+      case None =>
+        s"""{"rows":[],"cardinalities":{},"truncated":true,"stats":${stats.toJson}}"""
     }
-    // snapshot ONCE: the rows array and stats.rows must come from the same
-    // immutable view of the queue
-    val snapshot = parts.toArray(new Array[String](0))
-    val rows = snapshot.mkString("[", ",", "]")
-    // cardinalities re-run the plan as an aggregate — skip on an expired
-    // query rather than paying the scan a second time past the deadline
-    val cardCols = df.columns.map(c =>
-      approx_count_distinct(col(s"`$c`")).cast("long").as(c))
-    val cards =
-      if (df.columns.isEmpty || !completed) "{}"
-      else df.agg(cardCols.head, cardCols.tail: _*).toJSON.collect()
-        .headOption.getOrElse("{}")
-    val elapsedMs = (System.nanoTime() - t0) / 1000000L
-    s"""{"rows":$rows,"cardinalities":$cards,"truncated":$truncated,""" +
-      s""""stats":{"elapsedMs":$elapsedMs,"rows":${snapshot.length},"completed":$completed}}"""
+  }
+
+  /** A value's identity for distinct counting, as Spark groups it: floating
+    * zeros and NaNs are normalized and binary compares by content.
+    */
+  private def distinctKey(v: Any): Any = v match {
+    case d: Double      => if (d == 0.0) 0.0 else d
+    case f: Float       => if (f == 0.0f) 0.0f else f
+    case b: Array[Byte] => b.toSeq
+    case other          => other
   }
 
   // ---- async query cache (web/cache.go: permalink entries with TTL) ------
@@ -537,7 +507,7 @@ object HttpServer {
       |  var h = '<table><tr>' + names.map(function(n) {
       |    var c = r.cardinalities && r.cardinalities[n];
       |    return '<th>' + esc(n) + (c !== undefined ?
-      |      ' <span class="card">~' + esc(c) + ' distinct</span>' : '') + '</th>';
+      |      ' <span class="card">' + esc(c) + ' distinct</span>' : '') + '</th>';
       |  }).join('') + '</tr>';
       |  r.rows.forEach(function(row) {
       |    h += '<tr>' + names.map(function(n) {
@@ -547,7 +517,7 @@ object HttpServer {
       |  h += '</table>';
       |  h += '<p class="stats">' + r.stats.rows + ' rows in ' + r.stats.elapsedMs + ' ms' +
       |    (r.truncated ? ' (truncated)' : '') +
-      |    (r.stats.completed ? '' : ' (deadline hit, partial)') + '</p>';
+      |    (r.stats.completed ? '' : ' (deadline hit)') + '</p>';
       |  out.innerHTML = h;
       |}
       |document.getElementById('runBtn').onclick = function() {

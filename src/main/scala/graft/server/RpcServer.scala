@@ -175,25 +175,24 @@ final class RpcServer(spark: SparkSession, db: GraftDB, port: Int) {
   }
 
   private def handleQuery(sql: String, out: DataOutputStream): Unit = {
-    val t0 = System.nanoTime()
-    val df = db.sql(sql)
-    Framing.write(out, "SCHEMA\n" + df.columns.mkString("\t"))
-    val it = df.toJSON.toLocalIterator()
-    val chunk = new StringBuilder
-    var n = 0
-    var total = 0L
-    while (it.hasNext) {
-      chunk.append(it.next()).append('\n')
-      n += 1; total += 1
-      if (n == 500) { Framing.write(out, "ROWS\n" + chunk); chunk.clear(); n = 0 }
+    val (_, stats) = db.runQuery(sql) { df =>
+      Framing.write(out, "SCHEMA\n" + df.columns.mkString("\t"))
+      val it = df.toJSON.toLocalIterator()
+      val chunk = new StringBuilder
+      var n = 0
+      var total = 0L
+      while (it.hasNext) {
+        chunk.append(it.next()).append('\n')
+        n += 1; total += 1
+        if (n == 500) { Framing.write(out, "ROWS\n" + chunk); chunk.clear(); n = 0 }
+      }
+      if (n > 0) Framing.write(out, "ROWS\n" + chunk)
+      ((), total)
     }
-    if (n > 0) Framing.write(out, "ROWS\n" + chunk)
     // the END frame body is the QueryStats JSON — the reference's query
     // results travel with common.QueryStats the same way (rpc/rpc.go,
     // common/common.go:57-64); clients that only match the verb ignore it
-    val elapsedMs = (System.nanoTime() - t0) / 1000000L
-    Framing.write(out,
-      s"""END\n{"elapsedMs":$elapsedMs,"rows":$total,"completed":true}""")
+    Framing.write(out, "END\n" + stats.toJson)
   }
 
   private def handleFollow(argLine: String, out: DataOutputStream): Unit = {

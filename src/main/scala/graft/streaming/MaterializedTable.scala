@@ -652,8 +652,7 @@ final class MaterializedTable(
       val bucketed: Option[(Seq[String], Int)] =
         manifest.buckets.orElse(
           if (dayMap.isEmpty && config.partitionBy.nonEmpty)
-            Some((config.partitionBy,
-              Integer.getInteger("graft.bucketCount", MaterializedTable.BucketCount).intValue()))
+            Some((config.partitionBy, MaterializedTable.BucketCount))
           else None)
       val withBucket = bucketed match {
         case Some((ds, n)) =>
@@ -970,8 +969,8 @@ object MaterializedTable {
     */
   val CommitGcGraceMillis: Long = 30000L
 
-  /** Default `__bucket=` dirs per day for partitionby tables
-    * (`-Dgraft.bucketCount=` overrides). A dim-equality query reads 1/N of
+  /** `__bucket=` dirs per day for a new partitionby store (an existing
+    * store keeps the count its manifest records). A dim-equality query reads 1/N of
     * the store's files; at 1000-executor scale N also bounds per-bucket
     * file sizes, so the value is a files-per-day knob, not a parallelism
     * cap (scans parallelize by row group regardless).

@@ -1464,9 +1464,12 @@ class GraftDBSpec extends AnyFunSuite with TestSession {
       Files.createTempDirectory("restart-db1").toString, () => T0)
     db1.registerDedupMaintenance("nd", idx, maxFilesPerPrefix = 1,
       gcOldGenerations = true)
-    db1.maintenanceTick() // flip -> -g1
-    db1.maintenanceTick() // GC the base generation
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(idx)))
+    val flipTick = db1.maintenanceTick() // flip -> -g1
+    val gcTick = db1.maintenanceTick() // GC the base generation
+    // the tick statuses and the base's lease count name the cause if the
+    // base ever survives (a failed flip, or a lease/execution pin on it)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(idx)),
+      s"flip tick: $flipTick; GC tick: $gcTick; leases on base: ${db1.leaseCount(idx)}")
     // "restart": a fresh process re-enrolls with the DECLARED base path —
     // generation discovery must land on -g1, not the GC'd base
     val db2 = new GraftDB(spark, yaml,

@@ -405,16 +405,22 @@ class ServerSpec extends AnyFunSuite with TestSession {
         .groupBy(f => f.split("/").takeRight(2).head).values.map(_.length).max
       assert(perPrefix === 1, s"dest still fragmented: $perPrefix")
       assert(spark.read.parquet(dest).count() === rowsBefore)
-      // the restarted stream admits into the DEST; the next tick reports ok
-      mem.addData(Seq((9000L, "post compact novel doc")))
-      val deadline2 = System.currentTimeMillis() + 30000
-      while (!spark.read.parquet(dest).select(col("id"))
-               .filter(col("id") === 9000L).head(1).nonEmpty &&
-             System.currentTimeMillis() < deadline2) {
-        Thread.sleep(200)
-      }
-      assert(spark.read.parquet(dest).filter(col("id") === 9000L).count() === 1,
-        "restarted stream not admitting into dest")
+      // the restarted stream admits into the DEST; the next tick reports ok.
+      // That admit can make the daemon compact g1 -> g2 and GC g1 a tick
+      // later, so the reads of g1 hold a lease (the documented reader
+      // contract) taken before the admit
+      val destLease = running.db.pinPath(dest)
+      try {
+        mem.addData(Seq((9000L, "post compact novel doc")))
+        val deadline2 = System.currentTimeMillis() + 30000
+        while (!spark.read.parquet(dest).select(col("id"))
+                 .filter(col("id") === 9000L).head(1).nonEmpty &&
+               System.currentTimeMillis() < deadline2) {
+          Thread.sleep(200)
+        }
+        assert(spark.read.parquet(dest).filter(col("id") === 9000L).count() === 1,
+          "restarted stream not admitting into dest")
+      } finally destLease.close()
       val deadline3 = System.currentTimeMillis() + 30000
       while (!running.db.lastMaintenance.exists { case (n, s) =>
                n == "nd" && s.startsWith("ok") } &&
@@ -1409,5 +1415,156 @@ class ServerSpec extends AnyFunSuite with TestSession {
       assert(ins2.statusCode() == 200 && ins2.body().contains("\"inserted\":2"),
         ins2.body())
     } finally srv.stop()
+  }
+
+  /** Jobs `body` launches, counted by a listener once delivery settles. */
+  private def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // listener delivery is async: wait until the count is stable
+      var last = -1
+      var stable = 0
+      while (stable < 3) {
+        Thread.sleep(150)
+        val now = jobs.get
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("/run matches a DataFrame reference: rows byte for byte, exact cardinalities, no extra jobs") {
+    import org.apache.spark.sql.functions.{col, count_distinct}
+    val dir = Files.createTempDirectory("graft-http-ref").toString
+    val yaml =
+      """combined:
+        |  retentionperiod: 1h
+        |  sql: >
+        |    SELECT requests, AVG(load_avg) AS load_avg
+        |    FROM inbound GROUP BY *, period(5m)
+        |""".stripMargin
+    val db = new GraftDB(spark, yaml, dir, () => T0 + 1800000L)
+    val srv = new HttpServer(spark, db, 0)
+    val port = srv.start()
+    try {
+      // 4 periods x 3 servers; s2 never reports load_avg (a null column
+      // value in every s2 row)
+      val lines = for (k <- 0 until 4; s <- 1 to 3) yield {
+        val load = if (s == 2) "" else s""", "load_avg": ${k * 0.5 + s}"""
+        s"""{"ts": ${T0 + k * 300000L}, "dims": {"server": "s$s"}, """ +
+          s""""vals": {"requests": ${k * 10 + s % 2}$load}}"""
+      }
+      assert(srv.insertJsonLines("inbound", lines.mkString("\n")) === 12)
+      val q = "SELECT requests, load_avg FROM combined " +
+        "GROUP BY server, period(5m) ORDER BY _time, server"
+      val client = HttpClient.newHttpClient()
+      def run(): String = {
+        val r = client.send(
+          HttpRequest.newBuilder(URI.create(s"http://localhost:$port/run"))
+            .POST(HttpRequest.BodyPublishers.ofString(q)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode() == 200, r.body())
+        r.body()
+      }
+      val ref = db.sql(q)
+      assert(ref.columns.toSeq == Seq("_time", "server", "requests", "load_avg"))
+      assert(ref.filter(col("load_avg").isNull).count() === 4)
+      val refRows = ref.toJSON.collect()
+      assert(refRows.length === 12)
+      val body = run()
+      val rowsJson = body.substring(body.indexOf("\"rows\":") + 7,
+        body.indexOf(",\"cardinalities\":"))
+      assert(rowsJson == refRows.mkString("[", ",", "]"), body)
+      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
+      val cards = node.get("cardinalities")
+      assert(cards.size === ref.columns.length, body)
+      for (c <- ref.columns) {
+        val exact = ref.agg(count_distinct(col(s"`$c`"))).head().getLong(0)
+        assert(cards.get(c).asLong === exact, s"cardinality of $c: $body")
+      }
+      assert(!node.get("truncated").asBoolean, body)
+      assert(node.get("stats").get("rows").asLong === 12L, body)
+      // one /run launches no job beyond what collecting the query takes
+      val collectJobs = jobsDuring(db.sql(q).collect())
+      val runJobs = jobsDuring(run())
+      info(s"/run: $runJobs jobs; collect: $collectJobs jobs")
+      assert(runJobs <= collectJobs,
+        s"/run launched $runJobs jobs; collecting the query launches $collectJobs")
+    } finally srv.stop()
+  }
+
+  test("SIMSEARCH over /run and RPC QUERY releases its leases on return; the old generation is GC'd") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    val vecs = (0L until 40L).map { i =>
+      (i, Seq.fill(6)((rnd.nextGaussian() * 2).toFloat))
+    }.toDF("vec_id", "embedding")
+    val idx = Files.createTempDirectory("srv-lease-idx").toString + "/i"
+    graft.pipeline.Similarity.ivfBuildIfMissing(vecs, col("embedding"),
+      col("vec_id"), nCentroids = 4, idx)
+    val probe = vecs.filter(col("vec_id") === 0).select(col("embedding"))
+      .collect()(0).getSeq[Float](0)
+    val vecLit = probe.map(f => new java.math.BigDecimal(f.toString)
+      .toPlainString).mkString(",")
+    val db = new GraftDB(spark,
+      "combined:\n  sql: >\n    SELECT requests FROM inbound GROUP BY server, period(5m)\n",
+      Files.createTempDirectory("srv-lease-db").toString, () => T0)
+    db.registerAnnIndex("vidx", idx, "embedding", "vec_id")
+    // scanBudget 0: every tick re-clusters, so every tick is a flip
+    db.registerAnnMaintenance("vidx", idx, "embedding", "vec_id",
+      nProbe = 2, scanBudget = 0.0, gcOldGenerations = true)
+    val http = new HttpServer(spark, db, 0)
+    val httpPort = http.start()
+    val rpc = new graft.server.RpcServer(spark, db, 0)
+    val rpcPort = rpc.start()
+    val sql = s"SELECT score FROM SIMSEARCH('vidx', [$vecLit], 3, 4) GROUP BY id"
+    // the query's own lease goes when it returns; the execution pin
+    // releases on the async listener bus — the exec-pin specs' 60 s bound
+    def drained(path: String): Unit = {
+      val quiesce = System.nanoTime() + 60L * 1000000000L
+      while (db.leaseCount(path) > 0 && System.nanoTime() < quiesce)
+        Thread.sleep(10)
+      assert(db.leaseCount(path) === 0, s"$path still leased after the query")
+    }
+    // each tick flips; the tick after the query's flip GCs the generation
+    // the query read
+    def queryThenGc(query: => Unit): Unit = {
+      val read = db.maintainedState("vidx").get._1
+      query
+      drained(read)
+      val t1 = db.maintenanceTick()
+      assert(t1.exists { case (n, s) =>
+        n == "vidx" && s.startsWith("re-clustered -> ") }, t1.toString)
+      db.maintenanceTick()
+      assert(!Files.exists(java.nio.file.Paths.get(read)),
+        s"$read not GC'd by the tick after the flip")
+    }
+    try {
+      queryThenGc {
+        val resp = HttpClient.newHttpClient().send(
+          HttpRequest.newBuilder(URI.create(s"http://localhost:$httpPort/run"))
+            .POST(HttpRequest.BodyPublishers.ofString(sql)).build(),
+          HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 200, resp.body())
+        assert(new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(resp.body()).get("rows").size === 3, resp.body())
+      }
+      queryThenGc {
+        val (_, rows, stats) =
+          new graft.server.RpcClient("localhost", rpcPort).queryWithStats(sql)
+        assert(rows.length === 3, stats)
+      }
+    } finally {
+      http.stop()
+      rpc.stop()
+    }
   }
 }
